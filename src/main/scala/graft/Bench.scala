@@ -257,6 +257,14 @@ object Bench {
         if (c.start()) Some(c) else None
       }
     val controlTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // A query that throws is listed in the artifact's "failed" and makes
+    // the run exit nonzero; its -1.0 sentinel never enters a total.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def fail(name: String, e: Throwable): Seq[Double] = {
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      failed += name
+      Seq(-1.0)
+    }
     // Round-16 lockstep (VERDICT r15 ask #1): with a v2 control server the
     // sides alternate per RUN — H,C,H,C… — so each HEAD run and its
     // control partner sit in the same seconds-wide load window and no
@@ -278,9 +286,7 @@ object Bench {
                 h
               }.sorted
             } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name failed: ${e.getMessage}")
-                Seq(-1.0)
+              case e: Throwable => fail(name, e)
             }
           (head, if (ctrl.isEmpty) None else Some(ctrl.min))
         case _ =>
@@ -289,9 +295,7 @@ object Bench {
               (1 to prewarm).foreach(_ => execute(name))
               (1 to nRuns).map(_ => execute(name)).sorted
             } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] $name failed: ${e.getMessage}")
-                Seq(-1.0)
+              case e: Throwable => fail(name, e)
             }
           // legacy: control block measured immediately after HEAD's
           (head, control.flatMap(_.measure(name)))
@@ -304,6 +308,7 @@ object Bench {
     }
 
     def fmt(v: Double) = f"$v%.3f"
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, t) => "\"" + k + "\":" + fmt(t.head) }
       .mkString("{", ",", "}")
     val medians = results.map { case (k, t) => "\"" + k + "\":" + fmt(t(t.size / 2)) }
@@ -390,7 +395,7 @@ object Bench {
     val controlJson =
       if (control.isEmpty) "\"control\":null"
       else f""""control":{"tag":"$controlTag","total":$controlTotal%.3f,"queries":$ctrlQs,"ratio":$ratioJson,"median_ratio":$medianRatio%.2f,"code_movers":$codeMovers,"mover_retries":$retryJson,"ratio_gate":"normalized>1.15, retry-confirmed"}"""
-    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,$controlJson,"sf":"$sfDir"}"""
+    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$controlJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       detail.getBytes("UTF-8"))
@@ -404,6 +409,10 @@ object Bench {
     val ctrlStdout =
       if (control.isEmpty) ""
       else f""""control_tag":"$controlTag","control_total":$controlTotal%.3f,"code_movers":$codeMovers,"""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,$ctrlStdout"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$ctrlStdout"sf":"$sfDir"}""")
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

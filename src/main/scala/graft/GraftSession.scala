@@ -91,6 +91,18 @@ object GraftSession {
       // reference's TableWriterOperator surface); kept out of the repo
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
+      // file: without shell forks (graft/io/LocalFs.scala; docs/
+      // OPERATIONS.md §7). With no libhadoop, stock RawLocalFileSystem
+      // forks `chmod` per created file and `readlink` per FileContext
+      // rename: 18,212 process starts in one traced ingest_write
+      // benchmark run, mostly state-store files. Both the FileSystem and
+      // the FileContext binding are replaced, so state stores,
+      // offset/commit logs and every committer write fork-free; .crc
+      // sidecars and checkpoint checksum files stay. Other schemes
+      // (hdfs://, s3a://) are untouched.
+      .config("spark.hadoop.fs.file.impl", classOf[io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[io.ForkFreeLocalFs].getName)
       .config("spark.ui.enabled", "false")
     // A/B experiment hook (tools/BENCHLOG only): extra session confs via
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v". Gate runs never set it — the

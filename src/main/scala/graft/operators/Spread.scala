@@ -36,9 +36,11 @@ object Spread {
 
   /** Total bytes of the file sources under `df`, or None when the plan
     * has no file source (in-memory spec frames) — which disables the
-    * repartition and leaves those plans untouched.
+    * repartition and leaves those plans untouched. A file removed between
+    * listing and stat also gives None; any other failure propagates, so
+    * a broken file system cannot quietly change the plan.
     */
-  private def sourceBytes(df: DataFrame): Option[Long] = {
+  private[graft] def sourceBytes(df: DataFrame): Option[Long] = {
     val files = df.inputFiles
     if (files.isEmpty) None
     else try {
@@ -47,7 +49,7 @@ object Spread {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum)
-    } catch { case _: Throwable => None }
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Width law (round 17): at least this many source bytes per spread

@@ -421,4 +421,68 @@ class StreamingSpec extends AnyFunSuite {
       assert(streaming.nonEmpty)
     }
   }
+
+  test("stateful streaming and batch writes on file: start no shell process") {
+    // Without libhadoop, stock RawLocalFileSystem forks chmod per created
+    // file and readlink per FileContext rename; GraftSession binds file:
+    // to graft.io's fork-free classes. Record every process start while a
+    // checkpointed, stateful stream and a batch parquet write run.
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val base = Files.createTempDirectory("graft-stream-forks")
+    val src = Files.createDirectory(base.resolve("src"))
+    val raw = spark.read.parquet(s"${TestSession.sf}/events.parquet")
+    // Shell's class initialiser probes for bash and setsid once per JVM;
+    // those are not per-file forks, so let them happen before recording
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try {
+      val events = Tables.normalizeEventTs(
+        spark.readStream.schema(raw.schema).parquet(src.toString))
+        .dropDuplicates("event_id")
+        .select(col("user_id"), col("ts"), col("value")).as[graft.streaming.Ev]
+      val q = graft.streaming.EventOps.streamingSessionize(events, 30, "1 hour")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", base.resolve("checkpoint").toString)
+        .option("path", base.resolve("sink").toString)
+        .outputMode("append").start()
+      try {
+        // micro-batch 1: the events file; micro-batch 2: a redelivered
+        // seventh of it, written by a batch parquet job
+        Files.copy(Paths.get(s"${TestSession.sf}/events.parquet"), src.resolve("a.parquet"))
+        q.processAllAvailable()
+        val redeliver = base.resolve("redeliver")
+        raw.filter(col("event_id") % 7 === 0).coalesce(1).write.parquet(redeliver.toString)
+        val part = redeliver.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+        Files.move(part.toPath, src.resolve("b.parquet"), StandardCopyOption.ATOMIC_MOVE)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    } finally rec.stop()
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    val shellForks = RecordingFile.readAllEvents(jfr).asScala.filter { e =>
+      e.getEventType.getName == "jdk.ProcessStart" && e.getStackTrace != null &&
+        e.getStackTrace.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))
+    }.map(_.getString("command")).toSeq
+    val nForks = shellForks.size
+    assert(nForks == 0, s"shell forks, e.g. ${shellForks.take(3)}")
+    val stateFiles = Files.walk(base.resolve("checkpoint/state")).iterator.asScala
+      .count(_.toString.endsWith(".delta"))
+    assert(stateFiles > 0, "the stream must have written state-store files")
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(java.net.URI.create("file:///"), conf)
+      .isInstanceOf[graft.io.ForkFreeLocalFileSystem])
+    assert(FileContext.getLocalFSFileContext(conf).getDefaultFileSystem
+      .isInstanceOf[graft.io.ForkFreeLocalFs])
+  }
 }
