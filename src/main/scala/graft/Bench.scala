@@ -98,9 +98,6 @@ object Bench {
     private var toCtrl: java.io.PrintWriter = _
     private var fromCtrl: java.util.concurrent.BlockingQueue[String] = _
     private var dead = false
-    private var v2 = false
-    /** v2 server (per-run commands) — round-16 lockstep protocol. */
-    def perRun: Boolean = v2 && !dead
 
     private def readLine(timeoutSec: Long): Option[String] = {
       val v = fromCtrl.poll(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
@@ -150,8 +147,7 @@ object Bench {
         outPump.setDaemon(true); outPump.start()
         toCtrl = new java.io.PrintWriter(proc.getOutputStream, true)
         readLine(300) match {
-          case Some("CTRLPROTO READY v2") => v2 = true; true
-          case Some("CTRLPROTO READY") => true // legacy block-mode server
+          case Some("CTRLPROTO READY v2") => true
           case other => kill(s"bad handshake: $other"); false
         }
       } catch {
@@ -159,24 +155,8 @@ object Bench {
       }
     }
 
-    /** Min-of-N control time for the query, or None (absent in the
-      * control tag / failed / control dead). */
-    def measure(name: String): Option[Double] = {
-      if (dead) return None
-      toCtrl.println(name)
-      readLine(600).flatMap { l =>
-        l.split(' ') match {
-          case Array("CTRLPROTO", "DONE", `name`, secs) =>
-            try Some(secs.toDouble) catch { case _: Throwable => None }
-          case Array("CTRLPROTO", "ABSENT", `name`) => None
-          case Array("CTRLPROTO", "FAILED", `name`) => None
-          case _ => kill(s"protocol drift: $l"); None
-        }
-      }
-    }
-
-    /** One control prewarm execution (v2 only). */
-    def prewarmOnce(name: String): Unit = if (v2 && !dead) {
+    /** One control prewarm execution. */
+    def prewarmOnce(name: String): Unit = if (!dead) {
       toCtrl.println(s"prewarm $name")
       readLine(600) match {
         case Some(l) if l == s"CTRLPROTO WARM $name" => ()
@@ -187,9 +167,10 @@ object Bench {
       }
     }
 
-    /** One measured control run (v2 only). */
+    /** One measured control run, or None (absent in the control tag /
+      * failed / control dead). */
     def runOnce(name: String): Option[Double] = {
-      if (!v2 || dead) return None
+      if (dead) return None
       toCtrl.println(s"run $name")
       readLine(600).flatMap { l =>
         l.split(' ') match {
@@ -265,41 +246,29 @@ object Bench {
       failed += name
       Seq(-1.0)
     }
-    // Round-16 lockstep (VERDICT r15 ask #1): with a v2 control server the
-    // sides alternate per RUN — H,C,H,C… — so each HEAD run and its
-    // control partner sit in the same seconds-wide load window and no
-    // 30–60 s load wave can straddle one side's whole block (the r15
-    // failure mode that shipped two false 4.7–6.8x code-mover flags).
-    // A legacy (pre-v2) control degrades to the old per-BLOCK interleave.
-    def measureLockstep(name: String, nRuns: Int): (Seq[Double], Option[Double]) =
-      control match {
-        case Some(c) if c.perRun =>
-          val ctrl = scala.collection.mutable.ArrayBuffer[Double]()
-          val head =
-            try {
-              (1 to prewarm).foreach { _ =>
-                execute(name); c.prewarmOnce(name)
-              }
-              (1 to nRuns).map { _ =>
-                val h = execute(name)
-                c.runOnce(name).foreach(ctrl += _)
-                h
-              }.sorted
-            } catch {
-              case e: Throwable => fail(name, e)
-            }
-          (head, if (ctrl.isEmpty) None else Some(ctrl.min))
-        case _ =>
-          val head =
-            try {
-              (1 to prewarm).foreach(_ => execute(name))
-              (1 to nRuns).map(_ => execute(name)).sorted
-            } catch {
-              case e: Throwable => fail(name, e)
-            }
-          // legacy: control block measured immediately after HEAD's
-          (head, control.flatMap(_.measure(name)))
-      }
+    // Round-16 lockstep (VERDICT r15 ask #1): the sides alternate per
+    // RUN — H,C,H,C… — so each HEAD run and its control partner sit in
+    // the same seconds-wide load window and no 30–60 s load wave can
+    // straddle one side's whole block (the r15 failure mode that shipped
+    // two false 4.7–6.8x code-mover flags). Without a control only the
+    // HEAD runs execute and the control minimum is None.
+    def measureLockstep(name: String, nRuns: Int): (Seq[Double], Option[Double]) = {
+      val ctrl = scala.collection.mutable.ArrayBuffer[Double]()
+      val head =
+        try {
+          (1 to prewarm).foreach { _ =>
+            execute(name); control.foreach(_.prewarmOnce(name))
+          }
+          (1 to nRuns).map { _ =>
+            val h = execute(name)
+            control.flatMap(_.runOnce(name)).foreach(ctrl += _)
+            h
+          }.sorted
+        } catch {
+          case e: Throwable => fail(name, e)
+        }
+      (head, if (ctrl.isEmpty) None else Some(ctrl.min))
+    }
     val results = headline
       .filter(n => only.forall(_.contains(n))).map { name =>
       val (times, ctrlMin) = measureLockstep(name, runs)
@@ -375,14 +344,11 @@ object Bench {
     val retries = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val confirmedMovers = suspects.flatMap { case (k, r0) =>
       val n0 = r0 / medianRatio
-      if (!control.exists(_.perRun)) Some(k -> n0) // legacy control: no retry channel
-      else {
-        val (ts, ctrlMin) = measureLockstep(k, math.max(3, runs - 2))
-        val n1 = (for { c <- ctrlMin if c > 0; h = ts.head if h > 0 }
-          yield (h / c) / medianRatio).getOrElse(n0)
-        retries(k) = (n0, n1)
-        if (n1 > 1.15) Some(k -> math.min(n0, n1)) else None
-      }
+      val (ts, ctrlMin) = measureLockstep(k, math.max(3, runs - 2))
+      val n1 = (for { c <- ctrlMin if c > 0; h = ts.head if h > 0 }
+        yield (h / c) / medianRatio).getOrElse(n0)
+      retries(k) = (n0, n1)
+      if (n1 > 1.15) Some(k -> math.min(n0, n1)) else None
     }
     control.foreach(_.stop())
     val codeMovers = confirmedMovers

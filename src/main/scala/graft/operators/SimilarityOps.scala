@@ -142,7 +142,7 @@ object SimilarityOps extends QueryGroup {
     // Rademacher signs: one xxhash64 per row gave one SIGN BIT in the
     // round-6 version — T×B hashes per (vec, dim) row made the hash the
     // dominant signature cost (144 hashes/row at T=16, B=9 ≈ 184M calls
-    // at sf0.1; SpikeHunt round 10). Each hash has 64 iid-quality bits,
+    // at sf0.1; profiled round 10). Each hash has 64 iid-quality bits,
     // so derive T×B signs from ⌈T·B/64⌉ hashes per row by bit-slicing:
     // sign(t,j) = bit (t·bits+j) mod 64 of xxhash64((t·bits+j) div 64, d).
     // Statistically identical hyperplanes (independent fair sign flips),

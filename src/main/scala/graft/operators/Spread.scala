@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (documents.parquet: 5 000 rows / 584 KB at sf0.1), so every scan is a
   * single task no matter how many cores the session has — and the text
   * operators do their expensive work (regex tokenize, shingle explode,
-  * per-gram hashing) MAP-SIDE, before the first exchange. Measured with
-  * ProfileBreakdown at sf0.1×32 cores: the tokenize/explode stage of
+  * per-gram hashing) MAP-SIDE, before the first exchange. Measured per
+  * job at sf0.1×32 cores: the tokenize/explode stage of
   * dd_minhash_lsh's verify-join broadcasts ran 0.86 s + 1.16 s on one
   * core each; tx_perplexity's trigram census 1.35 s; dd_decontaminate's
   * probe pass 0.89 s — all single-task.

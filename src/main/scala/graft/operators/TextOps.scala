@@ -587,16 +587,14 @@ object TextOps extends QueryGroup {
     * shuffle (groupBy on dst); `localCheckpoint` truncates the growing
     * lineage (on a real cluster: `checkpoint` to reliable storage).
     */
-  /** Edge-count ceiling for the driver union-find fast path — the same
-    * order of magnitude Spark itself collects for a broadcast relation
-    * (1M (long,long) edges ≈ 16 MB). Chosen by measured edge count at
-    * run time, not configuration, so corpus-scale graphs always take the
-    * distributed loop.
+  /** `driverMaxEdges` is the edge-count ceiling for the driver
+    * union-find fast path — the same order of magnitude Spark itself
+    * collects for a broadcast relation (1M (long,long) edges ≈ 16 MB).
+    * The path is chosen by measured edge count at run time, so
+    * corpus-scale graphs always take the distributed loop; 0 forces it.
     */
-  private[graft] def driverCcMaxEdges: Long =
-    sys.props.get("graft.cc.driverMaxEdges").map(_.toLong).getOrElse(1000000L)
-
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
+      driverMaxEdges: Long = 1000000L): DataFrame = {
     // materialize the pair generation ONCE before mirroring: the union
     // references `pairs` twice, and without this the (possibly
     // quadratic) pair join runs twice — measured 11.6 s → 6 s at sf0.1
@@ -612,7 +610,7 @@ object TextOps extends QueryGroup {
     // chain/planted cases, and the distributed loop remains the path
     // for corpus-scale graphs.
     val nEdges = p0.count()
-    if (nEdges <= driverCcMaxEdges) {
+    if (nEdges <= driverMaxEdges) {
       val spark = p0.sparkSession
       import spark.implicits._
       val es = p0.collect()

@@ -131,8 +131,7 @@ object TpcdsQueries extends QueryGroup {
           val body = TpcdsSynth.tableSql(t,
             b => s"tpcds.base_$b", custCount)
           spark.sql(s"CREATE OR REPLACE VIEW tpcds.$t AS $body")
-          if (generatedDims(t) && sys.props.get("graft.tpcds.cacheDims").forall(_ == "true"))
-            spark.catalog.cacheTable(s"tpcds.$t")
+          if (generatedDims(t)) spark.catalog.cacheTable(s"tpcds.$t")
           // adapted-corpus fast path: a TEMP view registered from the
           // DataFrame stores the ANALYZED plan, where a catalog view
           // stores TEXT that is re-parsed and re-analyzed on every

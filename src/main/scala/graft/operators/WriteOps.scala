@@ -58,15 +58,9 @@ object WriteOps extends QueryGroup {
         |  CAST(sum(n_copies) + 0 AS BIGINT) AS total_copies,
         |  CAST(min(keeper) AS BIGINT) - 1 AS min_keeper
         |FROM s""".stripMargin) { (s, _) =>
-      s.sql("DROP TABLE IF EXISTS graft_dedup_survivors")
       // the in-memory catalog dies with the JVM but the warehouse dir does
       // not — clear any stale managed location before re-creating
-      val loc = new java.io.File(
-        s"${s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")}/graft_dedup_survivors")
-      if (loc.exists()) {
-        loc.listFiles().foreach(_.delete())
-        loc.delete()
-      }
+      dropManaged(s, "graft_dedup_survivors")
       // md5 returns a VARBINARY digest under the Presto registration
       // (round 12) — render to hex so content_hash stays a string
       // column the sentinel INSERT below can populate
@@ -247,13 +241,7 @@ object WriteOps extends QueryGroup {
         |  true AS ndv_ok,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents""".stripMargin) { (s, _) =>
-      s.sql("DROP TABLE IF EXISTS graft_docs_stats")
-      val loc = new java.io.File(
-        s"${s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")}/graft_docs_stats")
-      if (loc.exists()) {
-        loc.listFiles().foreach(_.delete())
-        loc.delete()
-      }
+      dropManaged(s, "graft_docs_stats")
       s.sql("CREATE TABLE graft_docs_stats USING parquet AS SELECT * FROM documents")
       s.sql("ANALYZE TABLE graft_docs_stats COMPUTE STATISTICS FOR COLUMNS doc_id, source")
       val meta = s.sessionState.catalog.getTableMetadata(

@@ -4,7 +4,7 @@ package graft.tools
   * protocol). Runs inside the PINNED control checkout
   * (`.bench-control`, a git worktree at the previous round's verdict
   * commit — see tools/setup_bench_control.sh) as a plain `java`
-  * subprocess that Bench (HEAD) drives in lockstep: one query name per
+  * subprocess that Bench (HEAD) drives in lockstep: one command per
   * stdin line, timed against the control's own SparkEntry, result on
   * stdout. Because control and HEAD measurements of each query run
   * seconds apart in the same bench session, their ratio carries its own
@@ -15,26 +15,21 @@ package graft.tools
   * Protocol (stdout lines are prefixed so interleaved log noise can't
   * corrupt the channel):
   *   CTRLPROTO READY v2              — session up, accepting commands
-  *   CTRLPROTO DONE <name> <secs>    — min-of-N measured time (block mode)
-  *   CTRLPROTO RAN <name> <secs>     — one run ("run <name>", v2)
-  *   CTRLPROTO WARM <name>           — one prewarm ("prewarm <name>", v2)
+  *   CTRLPROTO RAN <name> <secs>     — one measured run ("run <name>")
+  *   CTRLPROTO WARM <name>           — one prewarm ("prewarm <name>")
   *   CTRLPROTO ABSENT <name>         — query not in this tag's registry
-  *   CTRLPROTO FAILED <name>         — query threw (logged to stderr)
+  *   CTRLPROTO FAILED <name>         — query threw, or an unknown command
+  *                                     (logged to stderr)
   *   CTRLPROTO BYE                   — clean shutdown after "quit"
   *
-  * v2 (round 16, VERDICT r15 ask #1): the r15 block protocol ran HEAD's
-  * whole prewarm+5 block, THEN the control's, per query — a 30–60 s
-  * load wave aligned with one block defeated min-of-N and shipped two
-  * false 4.7–6.8x code-mover flags the judge had to clear by hand. The
-  * single-run commands let Bench alternate HEAD/control per RUN so both
-  * sides of every ratio share the same seconds-wide load window. The
-  * legacy one-shot block command is kept so an old Bench still works.
+  * One run per command lets Bench alternate HEAD/control per RUN, so
+  * both sides of every ratio share the same seconds-wide load window (a
+  * whole-block-per-side protocol let a 30–60 s load wave aligned with
+  * one block ship false 4.7–6.8x code-mover flags in round 15).
   */
 object ControlServer {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val prewarm = sys.env.getOrElse("SPARK_GRAFT_CONTROL_PREWARM", "1").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_CONTROL_RUNS", "2").toInt
     // never share a persisted LSH/IVF index with the HEAD JVM: reuse
     // semantics would let one side skip the build cost the other paid
     sys.props.put("graft.index.root",
@@ -56,32 +51,25 @@ object ControlServer {
     while (line != null && line.trim != "quit") {
       val cmd = line.trim
       if (cmd.nonEmpty) {
-        val (mode, name) = cmd.split(' ') match {
-          case Array("run", n)     => ("run", n)
-          case Array("prewarm", n) => ("prewarm", n)
-          case _                   => ("block", cmd)
-        }
-        if (!graft.SparkEntry.queries.contains(name)) {
-          out.println(s"CTRLPROTO ABSENT $name")
-        } else {
-          try {
-            mode match {
-              case "run" =>
+        cmd.split(' ') match {
+          case Array(mode @ ("run" | "prewarm"), name) =>
+            if (!graft.SparkEntry.queries.contains(name)) {
+              out.println(s"CTRLPROTO ABSENT $name")
+            } else {
+              try {
                 val t = execute(name)
-                out.println(f"CTRLPROTO RAN $name $t%.3f")
-              case "prewarm" =>
-                execute(name)
-                out.println(s"CTRLPROTO WARM $name")
-              case _ =>
-                (1 to prewarm).foreach(_ => execute(name))
-                val t = (1 to runs).map(_ => execute(name)).min
-                out.println(f"CTRLPROTO DONE $name $t%.3f")
+                out.println(
+                  if (mode == "run") f"CTRLPROTO RAN $name $t%.3f"
+                  else s"CTRLPROTO WARM $name")
+              } catch {
+                case e: Throwable =>
+                  System.err.println(s"[control] $name failed: ${e.getMessage}")
+                  out.println(s"CTRLPROTO FAILED $name")
+              }
             }
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[control] $name failed: ${e.getMessage}")
-              out.println(s"CTRLPROTO FAILED $name")
-          }
+          case _ =>
+            System.err.println(s"[control] unknown command: $cmd")
+            out.println(s"CTRLPROTO FAILED $cmd")
         }
         out.flush()
       }

@@ -44,9 +44,7 @@ object PlanDump {
             spark.listenerManager.register(l)
             try {
               df.write.format("noop").mode("overwrite").save()
-              // listener bus is async
-              var waited = 0
-              while (captured == null && waited < 100) { Thread.sleep(100); waited += 1 }
+              org.apache.spark.sql.graft.BusDrain(spark.sparkContext)
             } finally spark.listenerManager.unregister(l)
             if (captured != null) captured
             else df.queryExecution.explainString(

@@ -160,17 +160,14 @@ class TextOpsSpec extends AnyFunSuite {
     // a component whose diameter exceeds the iteration cap fails LOUDLY
     // instead of returning partial (wrong) labels: a 10-node chain needs
     // 9 propagation rounds, so maxIters = 3 cannot converge. (The cap
-    // contract belongs to the DISTRIBUTED loop — force it via the
-    // driver-path ceiling override; the driver union-find is exact at
-    // any diameter.)
+    // contract belongs to the DISTRIBUTED loop — force it by setting the
+    // driver-path ceiling to 0; the driver union-find is exact at any
+    // diameter.)
     val chain = spark.createDataFrame(
       spark.sparkContext.parallelize((1L until 10L).map(i => Row(i, i + 1))), schema)
-    sys.props("graft.cc.driverMaxEdges") = "0"
-    try {
-      val e = intercept[IllegalStateException](
-        TextOps.connectedComponents(chain, maxIters = 3))
-      assert(e.getMessage.contains("did not converge"))
-    } finally sys.props.remove("graft.cc.driverMaxEdges")
+    val e = intercept[IllegalStateException](
+      TextOps.connectedComponents(chain, maxIters = 3, driverMaxEdges = 0))
+    assert(e.getMessage.contains("did not converge"))
   }
 
   test("connected components: driver union-find ≡ distributed loop") {
@@ -185,11 +182,8 @@ class TextOpsSpec extends AnyFunSuite {
     val pairs = spark.createDataFrame(spark.sparkContext.parallelize(edges), schema)
     val fast = TextOps.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    sys.props("graft.cc.driverMaxEdges") = "0"
-    val loop =
-      try TextOps.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally sys.props.remove("graft.cc.driverMaxEdges")
+    val loop = TextOps.connectedComponents(pairs, driverMaxEdges = 0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == loop, s"driver fast path diverged: $fast vs $loop")
     assert(fast(5L) == 2L && fast(12L) == 7L && fast(21L) == 20L)
   }
@@ -205,9 +199,8 @@ class TextOpsSpec extends AnyFunSuite {
     // exists for
     val chain = spark.createDataFrame(
       spark.sparkContext.parallelize((1L until 60L).map(i => Row(i, i + 1))), schema)
-    sys.props("graft.cc.driverMaxEdges") = "0"
-    try assertThrows[IllegalStateException](TextOps.connectedComponents(chain))
-    finally sys.props.remove("graft.cc.driverMaxEdges")
+    assertThrows[IllegalStateException](
+      TextOps.connectedComponents(chain, driverMaxEdges = 0))
     val cc = TextOps.connectedComponentsLogN(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc.size == 60 && cc.values.forall(_ == 1L),

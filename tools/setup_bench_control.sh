@@ -6,10 +6,16 @@
 # into bench_detail.json — the scored bench point then carries its own
 # load normalization (round-15 verdict ask #1).
 #
-# Usage: tools/setup_bench_control.sh [control-commit]
+# Usage: tools/setup_bench_control.sh <control-commit>
+# The commit is required: the control is the previous round's verdict
+# commit, which changes every round, so there is no safe default.
 set -euo pipefail
+if [ $# -ne 1 ]; then
+  echo "usage: $0 <control-commit>  (the previous round's verdict commit)" >&2
+  exit 2
+fi
 cd "$(dirname "$0")/.."
-TAG="${1:-4a257e6}"   # round-15 verdict commit
+TAG="$1"
 
 git worktree remove --force .bench-control 2>/dev/null || true
 rm -rf .bench-control
