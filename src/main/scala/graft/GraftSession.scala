@@ -3,20 +3,37 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single place that pins the session configuration the whole engine
-  * assumes (SURVEY.md §7.0): UTC, ANSI-ish semantics, AQE + CBO on,
-  * shuffle parallelism sized for local[32] (the driver's harness box)
-  * while remaining a sane default for a real cluster (AQE coalesces).
+  * assumes (SURVEY.md §7.0): UTC, ANSI-ish semantics, AQE + CBO on, and
+  * shuffle partitions that follow the session's cores: one partition per
+  * task slot of `local[cores]` (docs/OPERATIONS.md §3).
   */
 object GraftSession {
+  /** Task slots of the local session: `SPARK_GRAFT_CPUS`, 32 when unset. */
+  lazy val cores: Int = parseCores(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A positive integer, or 32 when unset; anything else (`*`, `0`, `4x`)
+    * fails naming the variable rather than reaching a master URL or conf.
+    */
+  def parseCores(value: Option[String]): Int = value match {
+    case None => 32
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
   def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
       // Presto-named functions + dialect parser (SURVEY.md §7.0 layer 2/3)
       .withExtensions(new functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
+      // One shuffle partition per task slot. Batch queries start here and
+      // AQE coalesces; stateful streams run without AQE, so this count is
+      // exactly the state-store tasks each stateful operator runs per
+      // micro-batch, and a new checkpoint keeps it for good (restarts
+      // read it back from the offset log). Unset, both are 32.
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // no Hive-style ${var} substitution in SQL text — the reference
       // has no such notion, and it silently EMPTIES regexp_replace

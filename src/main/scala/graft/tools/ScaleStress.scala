@@ -99,7 +99,7 @@ object ScaleStress {
     // clean). Refusing up front with the remediation beats an OOM
     // twenty minutes into the suite.
     if (mult >= 30) {
-      val slots = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+      val slots = GraftSession.cores
       val needGiB = math.max(1.25 * slots, 40.0) // measured margin at m30
       val haveGiB = Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024)
       require(haveGiB >= needGiB,

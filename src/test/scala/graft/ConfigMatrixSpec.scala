@@ -109,6 +109,8 @@ class ConfigMatrixSpec extends AnyFunSuite {
     test(s"config matrix: $name invariant to the empty-grouping-sets escape hatch") {
       val key = graft.plans.EmptyGroupingSetsRule.EnabledKey
       val defaults = snapshot(name)
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       try {
         spark.conf.set(key, "false")
         assert(snapshot(name) == defaults,
@@ -119,8 +121,8 @@ class ConfigMatrixSpec extends AnyFunSuite {
           s"$name diverges with $key=false under constrained config")
       } finally {
         spark.conf.unset(key)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
     }
   }
@@ -133,6 +135,8 @@ class ConfigMatrixSpec extends AnyFunSuite {
   test("config matrix: tpcds_q27_verbatim escape hatch drops only the grand-total row") {
     val key = graft.plans.EmptyGroupingSetsRule.EnabledKey
     val defaults = snapshot("tpcds_q27_verbatim")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set(key, "false")
       val off = snapshot("tpcds_q27_verbatim")
@@ -145,8 +149,8 @@ class ConfigMatrixSpec extends AnyFunSuite {
         "rule-off state diverges under constrained config")
     } finally {
       spark.conf.unset(key)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 

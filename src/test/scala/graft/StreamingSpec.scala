@@ -422,6 +422,120 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** The ingest stream: redelivery dedup on event_id, then the 20-minute
+    * sessionizer (the batch twin's gap) into a checkpointed parquet sink.
+    * The lateness outlasts every fixture timestamp, so no real event is
+    * late and only a sentinel far past the data closes the last sessions.
+    */
+  private def startIngest(src: java.nio.file.Path, base: java.nio.file.Path,
+      schema: org.apache.spark.sql.types.StructType) = {
+    import spark.implicits._
+    java.nio.file.Files.createDirectories(src)
+    val events = Tables.normalizeEventTs(spark.readStream.schema(schema).parquet(src.toString))
+      .dropDuplicates("event_id")
+      .select(col("user_id"), col("ts"), col("value")).as[graft.streaming.Ev]
+    graft.streaming.EventOps.streamingSessionize(events, 20, "30000 days")
+      .writeStream.format("parquet")
+      .option("checkpointLocation", base.resolve("checkpoint").toString)
+      .option("path", base.resolve("sink").toString)
+      .outputMode("append").start()
+  }
+
+  /** The fixture's events as two stream files split at the middle of its
+    * time range. The second also redelivers every 7th event of both
+    * halves and carries one sentinel event 40000 days past the data.
+    */
+  private def ingestFiles(base: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val events = Tables.load(spark, TestSession.sf, "events")
+    val range = events.agg(min("ts"), max("ts")).head()
+    val (lo, hi) = (range.getTimestamp(0).getTime, range.getTimestamp(1).getTime)
+    val cut = new java.sql.Timestamp(lo + (hi - lo) / 2)
+    val sentinel = events.limit(1)
+      .withColumn("event_id", lit(-1L))
+      .withColumn("ts", lit(new java.sql.Timestamp(hi + 40000L * 86400000L)))
+    Seq(events.filter(col("ts") < cut),
+      events.filter(col("ts") >= cut)
+        .unionByName(events.filter(col("event_id") % 7 === 0)).unionByName(sentinel))
+      .zipWithIndex.map { case (df, i) =>
+        val dir = base.resolve(s"file-$i")
+        df.coalesce(1).write.parquet(dir.toString)
+        dir.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+      }
+  }
+
+  private def deliver(file: java.nio.file.Path, src: java.nio.file.Path): Unit =
+    java.nio.file.Files.copy(file, src.resolve(file.getFileName))
+
+  private def stateProgress(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.recentProgress.filter(_.numInputRows > 0).toSeq.flatMap(_.stateOperators.toSeq)
+
+  private def sessionRows(sink: java.nio.file.Path) =
+    spark.read.parquet(sink.toString).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        math.rint(r.getDouble(3) * 100) / 100)).toSet
+
+  test("a new checkpoint gives every stateful operator one state partition per core") {
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-cores")
+    val files = ingestFiles(base)
+    val q = startIngest(base.resolve("src"), base, spark.read.parquet(files.head.toString).schema)
+    try {
+      deliver(files.head, base.resolve("src"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val cores = spark.sparkContext.defaultParallelism
+    val ops = stateProgress(q)
+    // dropDuplicates and flatMapGroupsWithState
+    assert(ops.size == 2, s"state operators: ${ops.map(_.operatorName)}")
+    assert(ops.forall(_.numShufflePartitions == cores),
+      s"state partitions ${ops.map(_.numShufflePartitions)} != $cores cores")
+    // the count a restart reads back from the offset log
+    val offsets = new String(java.nio.file.Files.readAllBytes(
+      base.resolve("checkpoint/offsets/0")), java.nio.charset.StandardCharsets.UTF_8)
+    assert(offsets.contains(s""""spark.sql.shuffle.partitions":"$cores""""), offsets)
+  }
+
+  test("a restarted stream keeps its checkpoint's state partitions and its results") {
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-restart")
+    val files = ingestFiles(base)
+    val schema = spark.read.parquet(files.head.toString).schema
+    val restarted = base.resolve("restarted")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
+      val first = startIngest(restarted.resolve("src"), restarted, schema)
+      try {
+        deliver(files(0), restarted.resolve("src"))
+        first.processAllAvailable()
+      } finally first.stop()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val second = startIngest(restarted.resolve("src"), restarted, schema)
+    try {
+      deliver(files(1), restarted.resolve("src"))
+      second.processAllAvailable()
+    } finally second.stop()
+    val ops = stateProgress(second)
+    assert(ops.nonEmpty && ops.forall(_.numShufflePartitions == 32),
+      s"restarted state partitions ${ops.map(_.numShufflePartitions)} != 32")
+
+    val uninterrupted = base.resolve("uninterrupted")
+    val q = startIngest(uninterrupted.resolve("src"), uninterrupted, schema)
+    try files.foreach { f =>
+      deliver(f, uninterrupted.resolve("src"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val resumed = sessionRows(restarted.resolve("sink"))
+    assert(resumed == sessionRows(uninterrupted.resolve("sink")))
+
+    // every real session is closed; only the sentinel's stays open
+    val cutoff = maxRealStart(spark.read.parquet(s"${TestSession.sf}/events.parquet"))
+    val batch = SparkEntry.queries("ev_custom_sessionize")(spark, TestSession.sf)
+      .collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[java.sql.Timestamp]("session_start"),
+        r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))).toSet
+    assert(resumed.filter(_._2.getTime <= cutoff) == batch)
+    assert(batch.size > 10)
+  }
+
   test("stateful streaming and batch writes on file: start no shell process") {
     // Without libhadoop, stock RawLocalFileSystem forks chmod per created
     // file and readlink per FileContext rename; GraftSession binds file:
