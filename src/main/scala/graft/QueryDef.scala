@@ -31,3 +31,17 @@ trait QueryGroup {
       f: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, None, (s, dir) => { Tables.register(s, dir); f(s, dir) })
 }
+
+object QueryGroup {
+  /** A one-shot SQL-text rewrite that must apply: replaces `from` with
+    * `to` when `text` holds exactly `n` occurrences of it, and otherwise
+    * throws naming the pattern, so a drifted reference text fails loudly
+    * instead of silently losing the rewrite.
+    */
+  def replaceExactly(text: String, from: String, to: String, n: Int = 1): String = {
+    val found = Iterator.iterate(text.indexOf(from))(i => text.indexOf(from, i + from.length))
+      .takeWhile(_ >= 0).size
+    require(found == n, s"expected $n occurrence(s) of [$from], found $found")
+    text.replace(from, to)
+  }
+}

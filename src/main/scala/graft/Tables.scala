@@ -41,26 +41,23 @@ object Tables {
 
   /** Last directory registered per session. Every QueryDef calls
     * `register` defensively; doing the work each time re-read 10 parquet
-    * footers and re-registered ~80 functions per query (measured as a
-    * uniform +0.3–0.8 s on every round-2 bench query), so the real work
-    * runs only when the session/dir pair changes.
+    * footers per query, so the real work runs only when the session/dir
+    * pair changes.
     */
   private val registeredDir =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
 
-  /** Register every table as a temp view on this session, plus the
-    * engine's Presto-named function layer. Idempotent and cheap when
-    * already registered for this (session, dir).
+  /** Register every table as a temp view on this session. Views only:
+    * the Presto-named functions are already in every GraftSession's
+    * registry (GraftExtensions). Idempotent and cheap when already
+    * registered for this (session, dir).
     */
   def register(spark: SparkSession, dir: String): Unit =
     // compute holds the per-key lock until registration completes, so a
     // concurrent caller on a fresh session can't observe the pair as
-    // registered while views/functions are still being created
+    // registered while views are still being created
     registeredDir.compute(spark, (_, prev) => {
-      if (prev != dir) {
-        all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-        graft.functions.GraftFunctions.registerAll(spark)
-      }
+      if (prev != dir) all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
       dir
     })
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 import graft.{QueryDef, QueryGroup, Tables}
+import graft.QueryGroup.replaceExactly
 
 /** Runs the reference's COMPLETE benchto TPC-H corpus (all 22 texts,
   * BenchtoTexts.scala) VERBATIM through the engine — double-quoted
@@ -140,7 +141,7 @@ object DialectOps extends QueryGroup {
     // q06 again with the date window shifted into the fixture's range —
     // same verbatim dialect surface, non-empty result
     verbatim("dialect_q06_shifted",
-      BenchtoTexts.q06.replace("1994-01-01", "1996-01-01"),
+      replaceExactly(BenchtoTexts.q06, "1994-01-01", "1996-01-01", n = 2),
       Seq("revenue"), Seq(r2("revenue")), ""),
 
     verbatim("dialect_q07_verbatim", BenchtoTexts.q07,
@@ -210,7 +211,7 @@ object DialectOps extends QueryGroup {
       Seq("name", "address"),
       Seq("name", "address"),
       "name",
-      oracleFix = _.replace("date('1994-01-01')", "DATE '1994-01-01'")),
+      oracleFix = replaceExactly(_, "date('1994-01-01')", "DATE '1994-01-01'", n = 2)),
 
     verbatim("dialect_q21_verbatim", BenchtoTexts.q21,
       Seq("name", "numwait"),

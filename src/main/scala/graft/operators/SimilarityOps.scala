@@ -111,6 +111,9 @@ object SimilarityOps extends QueryGroup {
     }
   }
 
+  /** None (count() instead) only when a file vanished between listing
+    * and stat, as in `Spread.sourceBytes`; any other failure surfaces.
+    */
   private def footerRows(spark: SparkSession,
       fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation): Option[Long] =
     try {
@@ -136,7 +139,7 @@ object SimilarityOps extends QueryGroup {
           Some(rows + (if (bytes > 0) restBytes * rows / bytes else 0L))
         }
       }
-    } catch { case _: Throwable => None }
+    } catch { case _: java.io.FileNotFoundException => None }
 
   private[graft] def bucketKeys(emb: DataFrame, tables: Int, bits: Int): DataFrame = {
     // Rademacher signs: one xxhash64 per row gave one SIGN BIT in the

@@ -1552,6 +1552,9 @@ object TextOps extends QueryGroup {
       val kept = m.filter(col("n_tokens") >= 20 &&
         col("n_stop").cast("double") / col("n_tokens") >= 0.02 &&
         (col("n_chars").cast("double") / col("n_tokens")).between(3, 10))
+      // assumes doc_id is never NULL (true of the documents table):
+      // min_by skips rows whose ordering key is NULL, so a NULL-doc_id
+      // copy could never be the one kept
       val deduped = kept
         .groupBy(md5(col("text")).as("h"))
         .agg(min_by(struct(col("source"), col("n_chars"), col("n_bpe")),

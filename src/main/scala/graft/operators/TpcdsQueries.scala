@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 import graft.{QueryDef, QueryGroup, Tables}
+import graft.QueryGroup.replaceExactly
 
 /** Adapted TPC-DS shape corpus over the synthesized [[TpcdsSynth]] schema —
   * 15 representative queries spanning the reference's TPC-DS families
@@ -1031,12 +1032,10 @@ object TpcdsQueries extends QueryGroup {
         import org.apache.spark.sql.functions._
         // union-of-reference year pushdown: only dyear 1999/2000 can
         // satisfy any of the four references' filters
-        val ytSql = fast(q11YearTotalBody).replace(
-          "AND ss_sold_date_sk = d_date_sk",
-          "AND ss_sold_date_sk = d_date_sk AND d_year IN (1999, 2000)")
-          .replace(
-            "AND ws_sold_date_sk = d_date_sk",
-            "AND ws_sold_date_sk = d_date_sk AND d_year IN (1999, 2000)")
+        val ytSql = Seq("ss", "ws").foldLeft(fast(q11YearTotalBody)) { (t, p) =>
+          replaceExactly(t, s"AND ${p}_sold_date_sk = d_date_sk",
+            s"AND ${p}_sold_date_sk = d_date_sk AND d_year IN (1999, 2000)")
+        }
         def tot(st: String, yr: Int) = max(when(
           col("sale_type") === st && col("dyear") === yr, col("year_total")))
         val wide = s.sql(ytSql)
@@ -1081,12 +1080,11 @@ object TpcdsQueries extends QueryGroup {
     // WITH-text (DuckDB evaluates each CTE once natively), so the
     // materialization is correctness-checked against the textual shape.
     {
-      val text = BenchtoTpcdsTexts.q14_1
-        .replace("'${database}.${schema}.store'", "'store'")
-        .replace("${database}.${schema}.", "tpcds.")
-        .replace(
-          """ORDER BY "channel" ASC, "i_brand_id" ASC, "i_class_id" ASC, "i_category_id" ASC""",
-          """ORDER BY "channel" ASC NULLS FIRST, "i_brand_id" ASC NULLS FIRST, "i_class_id" ASC NULLS FIRST, "i_category_id" ASC NULLS FIRST""")
+      val text = replaceExactly(
+        replaceExactly(BenchtoTpcdsTexts.q14_1, "'${database}.${schema}.store'", "'store'")
+          .replace("${database}.${schema}.", "tpcds."),
+        """ORDER BY "channel" ASC, "i_brand_id" ASC, "i_class_id" ASC, "i_category_id" ASC""",
+        """ORDER BY "channel" ASC NULLS FIRST, "i_brand_id" ASC NULLS FIRST, "i_class_id" ASC NULLS FIRST, "i_category_id" ASC NULLS FIRST""")
       val aliases = Seq("channel", "i_brand_id", "i_class_id", "i_category_id",
         "sales", "number_sales")
       val norm = Seq("channel", "i_brand_id", "i_class_id", "i_category_id",
@@ -1113,8 +1111,10 @@ object TpcdsQueries extends QueryGroup {
         // all three channel facts — six scans of the same lineitem file
         // per run. The channels are disjoint slices of lineitem with
         // identical (sold_date_sk, item_sk, quantity, list_price)
-        // derivations (TpcdsSynth.allChannelSalesSql), so both CTEs now
-        // read ONE shared fact scan carrying the channel as a column:
+        // derivations (TpcdsSynth.allChannelSalesSql), so the CTEs now
+        // read one scan per CTE instead of three, carrying the channel as
+        // a column (the two builds run concurrently over the same uncached
+        // plan, so a run scans lineitem twice, down from six):
         //  - avg_sales: the UNION ALL of the three slices IS the full
         //    scan (same multiset of rows, same decimal types, same AVG);
         //  - cross_items: INTERSECT over per-channel DISTINCT triples ≡
@@ -1177,10 +1177,10 @@ object TpcdsQueries extends QueryGroup {
     // inner join's existence requirement). Oracle runs the untouched
     // WITH-text.
     {
-      val text = BenchtoTpcdsTexts.q04
-        .replace("${database}.${schema}.", "tpcds.")
-        .replace("\"dyear\" = 2001", "\"dyear\" = 1999")
-        .replace("\"dyear\" = (2001 + 1)", "\"dyear\" = (1999 + 1)")
+      val text = replaceExactly(
+        replaceExactly(BenchtoTpcdsTexts.q04.replace("${database}.${schema}.", "tpcds."),
+          "\"dyear\" = 2001", "\"dyear\" = 1999", n = 3),
+        "\"dyear\" = (2001 + 1)", "\"dyear\" = (1999 + 1)", n = 3)
       val aliases = Seq("customer_id", "customer_first_name",
         "customer_last_name", "customer_preferred_cust_flag")
       val oracle = TpcdsSynth.duckCtePreamble +
@@ -1197,7 +1197,7 @@ object TpcdsQueries extends QueryGroup {
         def fast(sql: String) = sql.replace("tpcds.", "graft_tpcds_")
         import org.apache.spark.sql.functions._
         val ytSql = Seq("ss", "cs", "ws").foldLeft(fast(ytBody)) { (t, p) =>
-          t.replace(s"""AND ("${p}_sold_date_sk" = "d_date_sk")""",
+          replaceExactly(t, s"""AND ("${p}_sold_date_sk" = "d_date_sk")""",
             s"""AND ("${p}_sold_date_sk" = "d_date_sk") AND ("d_year" IN (1999, 2000))""")
         }
         def tot(st: String, yr: Int) = max(when(
@@ -1307,8 +1307,7 @@ object TpcdsQueries extends QueryGroup {
     verbatim("tpcds_q23_verbatim", BenchtoTpcdsTexts.q23_1,
       Seq("total_sales"), Seq(r2("total_sales")), ""),
     adapted("tpcds_q23",
-      BenchtoTpcdsTexts.q23_1
-        .replace("\"count\"(*) > 4", "\"count\"(*) > 1")
+      replaceExactly(BenchtoTpcdsTexts.q23_1, "\"count\"(*) > 4", "\"count\"(*) > 1")
         .replace("${database}.${schema}.", "tpcds."),
       Seq("total_sales"), Seq(r2("total_sales")), ""),
     // q33/q60: three-channel UNION-by-category family — every constant
@@ -1813,7 +1812,7 @@ object TpcdsQueries extends QueryGroup {
             "WHERE d_year IN (1999, 2000)")
           .localCheckpoint()
           .createOrReplaceTempView("q75_all_sales")
-        s.sql(wrapNorm(q75MainBody.replace("all_sales ", "q75_all_sales "),
+        s.sql(wrapNorm(replaceExactly(q75MainBody, "all_sales ", "q75_all_sales ", n = 2),
           aliases, norm, order))
       })
     },
@@ -3808,7 +3807,7 @@ object TpcdsQueries extends QueryGroup {
         s.sql(s"WITH cs_ui AS (\n${fast(csUiBody)}\n)\n${fast(crossBody)}")
           .localCheckpoint()
           .createOrReplaceTempView("q64_cross_sales")
-        s.sql(wrapNorm(mainBody.replace("cross_sales ", "q64_cross_sales "),
+        s.sql(wrapNorm(replaceExactly(mainBody, "cross_sales ", "q64_cross_sales ", n = 2),
           aliases, norm, order))
       })
     },

@@ -63,13 +63,6 @@ object AuditNames {
     "current_time" -> "bare keyword -> localtime / zoned TIME WITH TIME ZONE (rewriteBareTemporals; ZonedTimestampsSpec)",
     "get_json_object" -> "reference JsonFunctions.java:443 ObjectExtractor — subtree as JSON text, quotes kept (FnSpec); flag-off keeps Spark's unquoting builtin")
 
-  /** Builtins overridden via spark.udf.register in registerAll (the
-    * registry reports the UDFRegistration lambda, not a graft class).
-    */
-  val udfOverridden: Map[String, String] = Map(
-    "url_encode" -> "GraftFnUtils.urlEncode via registerAll (UrlFunctions.java:151; fuzz_url_parity)",
-    "url_decode" -> "GraftFnUtils.urlDecode via registerAll (UrlFunctions.java:162; fuzz_url_parity)")
-
   /** Dispositions for collisions that resolve to UNTOUCHED Spark
     * builtins: either the definitions are identical, a named sweep pins
     * value identity, or a documented leniency applies. Reviewed against
@@ -189,16 +182,11 @@ object AuditNames {
       .builtin.listFunction().map(_.funcName.toLowerCase).toSet
     val overlap = refNames.filter(builtin.contains).distinct.sorted
     val rows = overlap.map { n =>
-      // strip JVM-run-specific lambda suffixes ($$Lambda$N/0x…) so the
-      // rendered file is stable across runs (the spec compares it)
       val cls = reg.lookupFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(n))
         .map(_.getClassName).getOrElse("?")
-        .replaceAll("\\$\\$+Lambda.*$", "")
       if (cls.contains("graft"))
         ("GRAFT-OVERRIDDEN", n, cls)
-      else if (udfOverridden.contains(n) && cls.contains("UDFRegistration"))
-        ("GRAFT-OVERRIDDEN", n, udfOverridden(n))
       else if (parserSeam.contains(n))
         ("PARSER-SEAM", n, parserSeam(n))
       else dispositions.get(n) match {
@@ -245,9 +233,6 @@ object AuditNames {
       .filter(_.nonEmpty).toSeq
 
     val spark = GraftSession("graft-audit-names")
-    // full engine registration (incl. the udf.register family —
-    // url_encode/url_decode et al. override builtins only here)
-    graft.functions.GraftFunctions.registerAll(spark)
     val (rows, missing) = classify(refNames, spark.sessionState.functionRegistry)
 
     java.nio.file.Files.writeString(

@@ -6,7 +6,6 @@ package graft.tools
 object CheckNames {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession("name-check")
-    graft.Tables.register(spark, "/root/testdata/sf0.001")
     val names = scala.io.Source.fromFile(args(0)).getLines().filter(_.nonEmpty).toList
     val missing = names.filterNot { n =>
       try {

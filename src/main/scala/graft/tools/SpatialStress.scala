@@ -52,7 +52,6 @@ object SpatialStress {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val runs = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val spark = GraftSession("graft-spatial-stress")
-    graft.functions.GraftFunctions.registerAll(spark) // st_* UDFs
 
     // area ∝ mult ⇒ each axis ∝ √mult; |1 keeps it odd (coprime to the
     // even-free Knuth multiplier's power-of-two structure)

@@ -183,6 +183,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(SimilarityOps.estimatedRows(spark.table("embeddings")) == bare)
   }
 
+  test("estimatedRows: a refused footer stat propagates instead of falling back to count()") {
+    import graft.operators.SimilarityOps
+    val dir = java.nio.file.Files.createTempDirectory("graft-estrows")
+    spark.range(100).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    spark.conf.set("fs.failstat.impl", classOf[FailingStatFs].getName)
+    try {
+      val df = spark.read.parquet("failstat://" + dir.toString)
+      assert(SimilarityOps.estimatedRows(df) == 100)
+      FailingStatFs.fail = true
+      val e = intercept[java.io.IOException](SimilarityOps.estimatedRows(df))
+      assert(e.getMessage == "stat refused")
+    } finally {
+      FailingStatFs.fail = false
+      spark.conf.unset("fs.failstat.impl")
+    }
+  }
+
   test("semDedup: planted twins collapse, edge exemplar survives, distinct vectors kept") {
     import graft.operators.SimilarityOps
     Tables.register(spark, "/root/testdata/sf0.01")

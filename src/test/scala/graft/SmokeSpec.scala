@@ -8,7 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSession {
   lazy val spark: SparkSession = {
-    sys.props.put("SPARK_GRAFT_CPUS_TEST", "1")
     // fresh per-JVM index root: persisted-index specs assert build/reuse
     // counters, which only hold when no index survives a previous run
     sys.props.put("graft.index.root",

@@ -195,7 +195,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // round 13 its remainder is machine-checked — a new collision (or a
     // dropped override) with no recorded disposition fails the gate, and
     // the committed AUDIT_NAMES.md must match the live classification.
-    Tables.register(spark, TestSession.sf) // registerAll incl. udf overrides
     val refNames = scala.io.Source.fromFile("tools/ref_all_names.txt")
       .getLines().map(_.trim).filter(_.nonEmpty).toSeq
     val (rows, missing) = graft.tools.AuditNames.classify(

@@ -17,6 +17,16 @@ class TpcdsSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, TestSession.sf)
       .queryExecution.executedPlan.toString
 
+  test("replaceExactly: rewrites at the expected count, throws naming the pattern otherwise") {
+    import QueryGroup.replaceExactly
+    assert(replaceExactly("a x b x", "x", "y", n = 2) == "a y b y")
+    assert(replaceExactly("a x b", "x", "y") == "a y b")
+    val missing = intercept[IllegalArgumentException](replaceExactly("a b", "x", "y"))
+    assert(missing.getMessage.contains("[x]") && missing.getMessage.contains("found 0"))
+    val extra = intercept[IllegalArgumentException](replaceExactly("x x", "x", "y"))
+    assert(extra.getMessage.contains("[x]") && extra.getMessage.contains("found 2"))
+  }
+
   test("q03: fact-view projection prunes to needed base columns, dims broadcast") {
     val p = plan("tpcds_q03")
     // store_sales is a per-row projection over lineitem: a query not
