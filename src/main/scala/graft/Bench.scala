@@ -361,7 +361,7 @@ object Bench {
     val controlJson =
       if (control.isEmpty) "\"control\":null"
       else f""""control":{"tag":"$controlTag","total":$controlTotal%.3f,"queries":$ctrlQs,"ratio":$ratioJson,"median_ratio":$medianRatio%.2f,"code_movers":$codeMovers,"mover_retries":$retryJson,"ratio_gate":"normalized>1.15, retry-confirmed"}"""
-    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$controlJson,"sf":"$sfDir"}"""
+    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$controlJson,"sf":"$sfDir","cores":${GraftSession.cores}}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       detail.getBytes("UTF-8"))
@@ -375,7 +375,7 @@ object Bench {
     val ctrlStdout =
       if (control.isEmpty) ""
       else f""""control_tag":"$controlTag","control_total":$controlTotal%.3f,"code_movers":$codeMovers,"""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$ctrlStdout"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$ctrlStdout"sf":"$sfDir","cores":${GraftSession.cores}}""")
     if (failed.nonEmpty) {
       System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
       sys.exit(1)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** One declared capability of the engine: a named query (Spark-side
   * implementation) plus, when SQL-expressible, the equivalent ANSI SQL the
@@ -43,5 +44,19 @@ object QueryGroup {
       .takeWhile(_ >= 0).size
     require(found == n, s"expected $n occurrence(s) of [$from], found $found")
     text.replace(from, to)
+  }
+
+  /** Builds `df` with the dialect flag `key` (`PrestoOperators.ConfKey`,
+    * `ZonedTimestamps.ConfKey`) on for this thread only. The flags are
+    * read through `SQLConf.get` at parse and analysis, which `s.sql`
+    * runs eagerly, so `df` is built against a clone of the session conf
+    * with the flag set and the session conf itself is never written: a
+    * value the caller set survives, and a concurrent statement on the
+    * same session never sees the flag.
+    */
+  def withDialect(s: SparkSession, key: String)(df: => DataFrame): DataFrame = {
+    val conf = s.sessionState.conf.clone()
+    conf.setConfString(key, "true")
+    SQLConf.withExistingConf(conf)(df)
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.QueryGroup
+import graft.QueryGroup.withDialect
 import org.apache.spark.sql.functions._
 
 /** Scalar-function family parity (SURVEY.md §2.9; reference registration
@@ -46,8 +47,7 @@ object ScalarFuncOps extends QueryGroup {
         |ORDER BY c_custkey""".stripMargin) { (s, _) =>
       // 2-arg trim family + split_part follow the reference's call
       // conventions — dialect-flag scope since round 13 (parse-time)
-      s.conf.set(PrestoOperators.ConfKey, "true")
-      try s.sql("""SELECT c_custkey,
+      withDialect(s, PrestoOperators.ConfKey)(s.sql("""SELECT c_custkey,
               |  CAST(length(c_name) AS BIGINT) AS len,
               |  upper(c_name) AS up,
               |  lower(c_name) AS lo,
@@ -75,8 +75,7 @@ object ScalarFuncOps extends QueryGroup {
               |  startswith(c_name, 'Customer') AS pfx,
               |  endswith(c_name, '0') AS sfx
               |FROM customer
-              |ORDER BY c_custkey""".stripMargin)
-      finally s.conf.unset(PrestoOperators.ConfKey)
+              |ORDER BY c_custkey""".stripMargin))
     },
 
     // datetime family (reference operator/scalar/DateTimeFunctions.java:68)

@@ -145,12 +145,6 @@ object BpeOps extends QueryGroup {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Vector[(Int, String, String, Long)]]()
 
-  /** Test/stress hook: drop the cached merges so the next call pays the
-    * full word-count + merge-loop cost (ScaleStress uses this to time
-    * training honestly instead of a cache read). */
-  private[graft] def invalidateTrained(s: SparkSession, dir: String): Unit =
-    cache.remove((s, dir))
-
   /** Word counts → driver → merge loop, cached per (session, dir). */
   def trainedMerges(s: SparkSession, dir: String): Vector[(Int, String, String, Long)] =
     cache.computeIfAbsent((s, dir), _ => {

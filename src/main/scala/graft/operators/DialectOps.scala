@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 import graft.{QueryDef, QueryGroup, Tables}
-import graft.QueryGroup.replaceExactly
+import graft.QueryGroup.{replaceExactly, withDialect}
+import graft.functions.{PrestoOperators, ZonedTimestamps}
 
 /** Runs the reference's COMPLETE benchto TPC-H corpus (all 22 texts,
   * BenchtoTexts.scala) VERBATIM through the engine — double-quoted
@@ -249,16 +250,14 @@ object DialectOps extends QueryGroup {
         |  o_totalprice / 2 AS half_price,
         |  round(o_orderkey / CAST(400 AS DOUBLE), 6) AS ratio
         |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT o_orderkey,
           |  o_orderkey / 7 AS div7,
           |  (0 - o_orderkey) / 7 AS negdiv7,
           |  o_orderkey / CAST(3 AS BIGINT) AS div3,
           |  o_totalprice / 2 AS half_price,
           |  round(o_orderkey / CAST(400 AS DOUBLE), 6) AS ratio
-          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin))
     },
 
     // exercised through the reference's own session surface: SET SESSION
@@ -296,14 +295,12 @@ object DialectOps extends QueryGroup {
         |  [[o_orderkey], [o_orderkey + 1]][2][1] AS nested,
         |  len([o_orderkey, 7]) AS alen
         |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT o_orderkey,
           |  ARRAY[1, 2, o_orderkey][3] AS a3,
           |  ARRAY[ARRAY[o_orderkey], ARRAY[o_orderkey + 1]][2][1] AS nested,
           |  cardinality(ARRAY[o_orderkey, 7]) AS alen
-          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin))
     },
 
     // ── dialect tranche 3 (round 11): TIME ± INTERVAL wraps modulo 24h
@@ -330,8 +327,7 @@ object DialectOps extends QueryGroup {
         |  CAST(CAST(DATE '2020-01-31' + INTERVAL 1 DAY AS DATE) AS VARCHAR) AS d_ok,
         |  CAST(TIMESTAMP '2020-01-01 10:00:00' + INTERVAL 2 HOUR AS VARCHAR) || '.000' AS ts_ok
         |FROM t ORDER BY o_orderkey""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey,
           |    make_time(CAST(o_orderkey % 24 AS INT), CAST(o_orderkey % 60 AS INT),
@@ -344,8 +340,7 @@ object DialectOps extends QueryGroup {
           |  CAST(tod + INTERVAL '3' MONTH AS STRING) AS ym_noop,
           |  CAST(DATE '2020-01-31' + INTERVAL '1' DAY AS STRING) AS d_ok,
           |  CAST(TIMESTAMP '2020-01-01 10:00:00' + INTERVAL '2' HOUR AS STRING) AS ts_ok
-          |FROM t ORDER BY o_orderkey""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM t ORDER BY o_orderkey""".stripMargin))
     },
 
     // ── dialect tranche 3 (round 11): extremum NULL propagation.
@@ -366,8 +361,7 @@ object DialectOps extends QueryGroup {
         |       ELSE list_min([o_orderkey, o_orderkey % 13]) END AS amn,
         |  list_max([o_orderkey, o_orderkey % 13]) AS amx_ctrl
         |FROM orders WHERE o_orderkey < 700 ORDER BY o_orderkey""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT o_orderkey,
           |  greatest(o_orderkey,
           |    CASE WHEN o_orderkey % 3 = 0 THEN NULL
@@ -380,8 +374,7 @@ object DialectOps extends QueryGroup {
           |    CASE WHEN o_orderkey % 4 = 0 THEN NULL
           |         ELSE o_orderkey % 13 END)) AS amn,
           |  array_max(array(o_orderkey, o_orderkey % 13)) AS amx_ctrl
-          |FROM orders WHERE o_orderkey < 700 ORDER BY o_orderkey""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM orders WHERE o_orderkey < 700 ORDER BY o_orderkey""".stripMargin))
     },
 
     // double-quoted identifiers: Presto lexes "…" as an identifier in
@@ -396,12 +389,10 @@ object DialectOps extends QueryGroup {
       """SELECT "n_name" AS "nm", "n_regionkey" AS "rk",
         |  'lit "kept"' AS "a b"
         |FROM "nation" WHERE "n_nationkey" < 10 ORDER BY "nm"""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT "n_name" AS "nm", "n_regionkey" AS "rk",
           |  'lit "kept"' AS "a b"
-          |FROM "nation" WHERE "n_nationkey" < 10 ORDER BY "nm"""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM "nation" WHERE "n_nationkey" < 10 ORDER BY "nm"""".stripMargin))
     },
 
     // standalone FROM UNNEST (Presto relationPrimary — no CROSS JOIN):
@@ -496,8 +487,7 @@ object DialectOps extends QueryGroup {
         |  CAST(CAST(wall AS DATE) AS VARCHAR) AS d_str,
         |  CAST(epoch(tstz) AS BIGINT) AS unix
         |FROM o ORDER BY k LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey AS k,
           |    element_at(array('Asia/Tokyo', 'America/New_York', 'Australia/Lord_Howe',
@@ -523,8 +513,7 @@ object DialectOps extends QueryGroup {
           |  CAST(CAST(zt AS TIMESTAMP) AS VARCHAR) AS wall_str,
           |  CAST(CAST(zt AS DATE) AS VARCHAR) AS d_str,
           |  CAST(to_unixtime(zt) AS BIGINT) AS unix
-          |FROM z ORDER BY k LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |FROM z ORDER BY k LIMIT 500""".stripMargin))
     },
 
     // zone-carrying arithmetic: date_trunc keeps the zone; day-time
@@ -559,8 +548,7 @@ object DialectOps extends QueryGroup {
         |  tstz > TIMESTAMPTZ '1995-06-15 00:00:00+00' AS cmp_lit,
         |  TRUE AS eq_cross
         |FROM z ORDER BY k LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey AS k,
           |    element_at(array('Asia/Tokyo', 'America/New_York', 'Australia/Lord_Howe',
@@ -581,8 +569,7 @@ object DialectOps extends QueryGroup {
           |  date_diff('hour', zt, zt + INTERVAL '26' HOUR) AS dd_hour,
           |  zt > TIMESTAMP '1995-06-15 00:00:00 UTC' AS cmp_lit,
           |  at_timezone(zt, 'Asia/Tokyo') = at_timezone(zt, 'America/New_York') AS eq_cross
-          |FROM z ORDER BY k LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |FROM z ORDER BY k LIMIT 500""".stripMargin))
     },
 
     // zone-carrying GROUP BY / DISTINCT key the INSTANT (round 12
@@ -607,8 +594,7 @@ object DialectOps extends QueryGroup {
         |UNION ALL
         |SELECT CAST(-2 AS BIGINT), (SELECT CAST(count(*) AS BIGINT) FROM (SELECT DISTINCT ts FROM t))
         |ORDER BY instant_s""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT at_timezone(CAST(CAST(o_orderdate AS TIMESTAMP) AS TIMESTAMP WITH TIME ZONE),
           |    element_at(array('Asia/Tokyo', 'America/New_York', 'Australia/Lord_Howe',
@@ -623,8 +609,7 @@ object DialectOps extends QueryGroup {
           |SELECT CAST(-1 AS BIGINT), (SELECT CAST(count(DISTINCT zt) AS BIGINT) FROM t)
           |UNION ALL
           |SELECT CAST(-2 AS BIGINT), (SELECT CAST(count(*) AS BIGINT) FROM (SELECT DISTINCT zt FROM t))
-          |ORDER BY instant_s""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |ORDER BY instant_s""".stripMargin))
     },
 
     // zone-carrying arithmetic ACROSS DST transitions (round 12 — these
@@ -659,8 +644,7 @@ object DialectOps extends QueryGroup {
         |  CAST(CAST(epoch(timezone(zone, wall + INTERVAL 1 DAY)) - epoch(tstz) AS BIGINT) / 3600 AS BIGINT) AS day_hours,
         |  CAST(epoch(tstz + INTERVAL 26 HOUR) - epoch(tstz) AS BIGINT) AS s26
         |FROM z ORDER BY k LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey AS k,
           |    element_at(array('America/New_York', 'America/New_York', 'Europe/London',
@@ -678,8 +662,7 @@ object DialectOps extends QueryGroup {
           |  CAST(zt + INTERVAL '1' MONTH AS VARCHAR) AS madd,
           |  date_diff('hour', zt, date_add('day', 1, zt)) AS day_hours,
           |  CAST(to_unixtime(zt + INTERVAL '26' HOUR) - to_unixtime(zt) AS BIGINT) AS s26
-          |FROM z ORDER BY k LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |FROM z ORDER BY k LIMIT 500""".stripMargin))
     },
 
     // at_timezone re-zoning (instant preserved, zone replaced — reference
@@ -711,8 +694,7 @@ object DialectOps extends QueryGroup {
         |  CAST(CAST((off2 - (off2 % 3600)) / 3600 AS BIGINT) AS BIGINT) AS tzh2,
         |  CAST(0 AS BIGINT) AS dsec
         |FROM o ORDER BY k LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey AS k,
           |    element_at(array('Asia/Tokyo', 'America/New_York', 'Australia/Lord_Howe',
@@ -731,8 +713,7 @@ object DialectOps extends QueryGroup {
           |  CAST(hour(at_timezone(zt, zone2)) AS BIGINT) AS hr2,
           |  timezone_hour(at_timezone(zt, zone2)) AS tzh2,
           |  CAST(to_unixtime(at_timezone(zt, zone2)) - to_unixtime(zt) AS BIGINT) AS dsec
-          |FROM z ORDER BY k LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |FROM z ORDER BY k LIMIT 500""".stripMargin))
     },
 
     // min/max aggregates and window ORDER BY on zoned values follow the
@@ -763,8 +744,7 @@ object DialectOps extends QueryGroup {
         |  FROM z)
         |SELECT g, CAST(rnk AS BIGINT) AS rnk, k, min_s, max_s
         |FROM r WHERE rnk <= 3 ORDER BY g, rnk""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH t AS (
           |  SELECT o_orderkey AS k,
           |    element_at(array('Asia/Tokyo', 'America/New_York', 'Australia/Lord_Howe',
@@ -782,8 +762,7 @@ object DialectOps extends QueryGroup {
           |    CAST(to_unixtime(max(zt) OVER (PARTITION BY g)) AS BIGINT) AS max_s
           |  FROM z)
           |SELECT g, CAST(rnk AS BIGINT) AS rnk, k, min_s, max_s
-          |FROM r WHERE rnk <= 3 ORDER BY g, rnk""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |FROM r WHERE rnk <= 3 ORDER BY g, rnk""".stripMargin))
     },
 
     // set operations on zoned values key the INSTANT (round 13 —
@@ -813,8 +792,7 @@ object DialectOps extends QueryGroup {
         |  SELECT 'union_d', CAST(count(*) AS BIGINT), CAST(sum(epoch(zt)) AS BIGINT)
         |  FROM (SELECT zt FROM a UNION SELECT zt FROM b))
         |ORDER BY op""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """WITH a AS (
           |  SELECT at_timezone(CAST(CAST(o_orderdate AS TIMESTAMP) AS TIMESTAMP WITH TIME ZONE),
           |    'Asia/Tokyo') AS zt
@@ -833,8 +811,7 @@ object DialectOps extends QueryGroup {
           |  UNION ALL
           |  SELECT 'union_d', CAST(count(*) AS BIGINT), CAST(sum(to_unixtime(zt)) AS BIGINT)
           |  FROM (SELECT zt FROM a UNION SELECT zt FROM b))
-          |ORDER BY op""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |ORDER BY op""".stripMargin))
     },
 
     // now()/current_timestamp under the zoned mode return TIMESTAMP WITH
@@ -848,8 +825,7 @@ object DialectOps extends QueryGroup {
       """SELECT CAST(0 AS BIGINT) AS tzh, CAST(0 AS BIGINT) AS tzm,
         |  CAST(1 AS BIGINT) AS zone_tok, CAST(1 AS BIGINT) AS same_epoch,
         |  CAST(1 AS BIGINT) AS kw_parity""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-      try s.sql(
+      withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
         """SELECT
           |  CAST(timezone_hour(now()) AS BIGINT) AS tzh,
           |  CAST(timezone_minute(now()) AS BIGINT) AS tzm,
@@ -857,8 +833,7 @@ object DialectOps extends QueryGroup {
           |  CAST(CASE WHEN abs(to_unixtime(now()) - to_unixtime(localtimestamp)) < 2.0
           |    THEN 1 ELSE 0 END AS BIGINT) AS same_epoch,
           |  CAST(CASE WHEN to_unixtime(current_timestamp) = to_unixtime(now())
-          |    THEN 1 ELSE 0 END AS BIGINT) AS kw_parity""".stripMargin)
-      finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+          |    THEN 1 ELSE 0 END AS BIGINT) AS kw_parity""".stripMargin))
     },
 
     // ── TIME WITH TIME ZONE under the zoned mode, oracle-compared
@@ -933,8 +908,7 @@ object DialectOps extends QueryGroup {
              |  (tod - off1 + off2) BETWEEN 0 AND 86399 AS eq_rezone,
              |  (tod - off1 + off2) BETWEEN 0 AND 86399 AS eq_possible
              |FROM o ORDER BY i""".stripMargin) { (s, _) =>
-        s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-        try s.sql(
+        withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
           gridSpark +
             s""", o AS (
                |  SELECT i,
@@ -969,8 +943,7 @@ object DialectOps extends QueryGroup {
                |  t1 < CAST(${todTxt("tod2", "ms")} AS TIME) AS ltm,
                |  t1 = te AS eq_rezone,
                |  (tod - off1 + off2) BETWEEN 0 AND 86399 AS eq_possible
-               |FROM z ORDER BY i""".stripMargin)
-        finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+               |FROM z ORDER BY i""".stripMargin))
       }
     },
 
@@ -1117,16 +1090,14 @@ object DialectOps extends QueryGroup {
         |  CAST(o_orderkey + 1 AS BIGINT) AS hu_dec,
         |  CAST(o_orderkey AS BIGINT) AS str_passthrough
         |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT o_orderkey,
           |  CAST(o_orderkey + 0.5D AS BIGINT) AS hu_pos,
           |  CAST(-(o_orderkey + 0.5D) AS BIGINT) AS hu_neg,
           |  CAST(o_orderkey + 0.3D AS BIGINT) AS hu_frac,
           |  CAST(CAST(o_orderkey AS DECIMAL(18,1)) + CAST(0.5 AS DECIMAL(2,1)) AS BIGINT) AS hu_dec,
           |  CAST(CAST(o_orderkey AS STRING) AS BIGINT) AS str_passthrough
-          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin))
     },
 
     // reduce() 4-arg lambda spelling (ArrayReduceFunction.java — state
@@ -1139,16 +1110,14 @@ object DialectOps extends QueryGroup {
         |  (o_orderkey + 5) * 10 AS folded,
         |  CAST(round((o_orderkey + 5) / 2.0, 2) AS DOUBLE) AS avg2
         |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin) { (s, _) =>
-      s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-      try s.sql(
+      withDialect(s, PrestoOperators.ConfKey)(s.sql(
         """SELECT o_orderkey,
           |  reduce(ARRAY[o_orderkey, 2, 3], CAST(0 AS BIGINT), (s, x) -> s + x, s -> s * 10) AS folded,
           |  CAST(reduce(ARRAY[o_orderkey, 5],
           |    CAST(ROW(0.0, 0) AS STRUCT<sum: DOUBLE, count: INT>),
           |    (s, x) -> CAST(ROW(s.sum + x, s.count + 1) AS STRUCT<sum: DOUBLE, count: INT>),
           |    s -> round(s.sum / s.count, 2)) AS DOUBLE) AS avg2
-          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin)
-      finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
+          |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin))
     },
   )
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.QueryGroup
+import graft.QueryGroup.withDialect
+import graft.functions.{PrestoOperators, ZonedTimestamps}
 
 /** Randomized-but-deterministic expression-parity sweeps: generate a few
   * hundred pseudo-random operand rows with an LCG written in portable SQL
@@ -26,24 +28,16 @@ import graft.QueryGroup
   *    rounding-boundary collision a measure-zero 1/2^18 event per row;
   *  - integer-ish outputs are CAST to BIGINT on both sides so dtype
   *    comparison is exact, not int-width-drift-dependent.
+  *
+  * The sweeps over the reference's CALL CONVENTIONS (log/trim argument
+  * order, element_at bounds, regexp_extract group-0 + NULL contracts,
+  * split_part NULL, map_concat last-wins) build under the Presto dialect
+  * flag: since round 13 the flag selects ONE coherent dialect, so these
+  * conventions no longer apply to default (pure-Spark-SQL) statements.
   */
 object FuzzParityOps extends QueryGroup {
 
   private val N = 400
-
-  /** Sweeps that exercise the reference's CALL CONVENTIONS (log/trim
-    * argument order, element_at bounds, regexp_extract group-0 + NULL
-    * contracts, split_part NULL, map_concat last-wins) run under the
-    * Presto dialect flag — round 13 made the flag select ONE coherent
-    * dialect, so these conventions are no longer applied to default
-    * (pure-Spark-SQL) statements. Conf scoping is parse-time: s.sql
-    * parses and analyzes eagerly, so unsetting after return is safe.
-    */
-  private def withPresto(s: org.apache.spark.sql.SparkSession)(
-      f: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    s.conf.set(graft.functions.PrestoOperators.ConfKey, "true")
-    try f finally s.conf.unset(graft.functions.PrestoOperators.ConfKey)
-  }
 
   /** Engine-side operand CTE (Spark SQL + graft registrations). */
   private val sparkOperands =
@@ -120,7 +114,7 @@ object FuzzParityOps extends QueryGroup {
         |  round(radians(n), 4) AS rd,
         |  CAST(floor(y * 10.0 / 101.0) + 1 AS BIGINT) AS wb
         |FROM o ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands +
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands +
         """SELECT i,
           |  CAST(abs(n) AS BIGINT) AS abs_n,
           |  CAST(sign(n) AS BIGINT) AS sign_n,
@@ -188,7 +182,7 @@ object FuzzParityOps extends QueryGroup {
         |  CAST(ascii(chr(CAST(97 + i % 26 AS INTEGER))) AS BIGINT) AS cp,
         |  translate(s, '_W', '-V') AS tr
         |FROM t ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands + """, t AS (
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands + """, t AS (
         |  SELECT i, m,
         |    concat('W', CAST(h1 % 1000 AS VARCHAR), '_',
         |           chr(97 + i % 26), chr(65 + h2 % 26)) AS s
@@ -300,7 +294,7 @@ object FuzzParityOps extends QueryGroup {
         |  CASE WHEN n > 0 THEN 'pos' WHEN n < 0 THEN 'neg' ELSE 'zero' END AS sgn,
         |  if(m > 11, m, -m) AS half_flip
         |FROM t ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands + """, t AS (
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands + """, t AS (
         |  SELECT i, n, m,
         |    array(h1 % 100, h2 % 97, CAST(n AS BIGINT), CAST(m AS BIGINT), i % 7) AS arr
         |  FROM o)
@@ -353,7 +347,7 @@ object FuzzParityOps extends QueryGroup {
         |  s LIKE 'W%' AS like_pfx,
         |  s LIKE '%a_%' AS like_one_after_a
         |FROM t ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands + """, t AS (
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands + """, t AS (
         |  SELECT i, concat('W', CAST(h1 % 1000 AS VARCHAR), '_',
         |                   chr(97 + i % 26),
         |                   CAST(h2 % 100 AS VARCHAR)) AS s
@@ -1052,7 +1046,7 @@ object FuzzParityOps extends QueryGroup {
         |  array_to_string(list_filter(map_keys(m), k -> k % 2 = 0), ',') AS even_keys,
         |  array_to_string(list_transform(map_values(m), v -> v || '!'), ',') AS bang_vals
         |FROM t ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands + """, t AS (
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands + """, t AS (
         |  SELECT i, h1, h2,
         |    map_from_arrays(
         |      array(h1 % 10, 10 + h2 % 10, 20 + (h1 + h2) % 10),
@@ -1496,8 +1490,7 @@ object FuzzParityOps extends QueryGroup {
            |  shift = 0 AS eq_shift,
            |  shift > 0 AS lt_shift
            |FROM w ORDER BY i""".stripMargin) { (s, _) =>
-        s.conf.set(graft.functions.ZonedTimestamps.ConfKey, "true")
-        try s.sql(
+        withDialect(s, ZonedTimestamps.ConfKey)(s.sql(
           s"""WITH g AS (
              |  SELECT id AS i,
              |    (id * 1103515245 + 12345) % 2147483648 AS h1,
@@ -1545,8 +1538,7 @@ object FuzzParityOps extends QueryGroup {
              |  CAST(at_timezone(zt, zone2) AS VARCHAR) AS rezone,
              |  zt = zs AS eq_shift,
              |  zt < zs AS lt_shift
-             |FROM z ORDER BY i""".stripMargin)
-        finally s.conf.unset(graft.functions.ZonedTimestamps.ConfKey)
+             |FROM z ORDER BY i""".stripMargin))
       }
     },
 
@@ -1648,7 +1640,7 @@ object FuzzParityOps extends QueryGroup {
         |       WHEN NOT isnan(dn1) AND dn1 = 7.0 THEN 2
         |       ELSE 0 END AS BIGINT) AS c_case
         |FROM u ORDER BY i""".stripMargin) { (s, _) =>
-      withPresto(s) { s.sql(sparkOperands + """, t AS (
+      withDialect(s, PrestoOperators.ConfKey) { s.sql(sparkOperands + """, t AS (
         |  SELECT i,
         |    CASE CAST(h1 % 6 AS INT) WHEN 0 THEN CAST('NaN' AS DOUBLE) WHEN 1 THEN CAST('Infinity' AS DOUBLE) WHEN 2 THEN CAST('-Infinity' AS DOUBLE) WHEN 3 THEN CAST(0.0 AS DOUBLE) WHEN 4 THEN CAST('-0.0' AS DOUBLE) ELSE x END AS d1,
         |    CASE CAST(h2 % 6 AS INT) WHEN 0 THEN CAST('NaN' AS DOUBLE) WHEN 1 THEN CAST('Infinity' AS DOUBLE) WHEN 2 THEN CAST(0.0 AS DOUBLE) WHEN 3 THEN CAST('-0.0' AS DOUBLE) WHEN 4 THEN CAST(7.0 AS DOUBLE) ELSE y END AS d2,
@@ -1767,7 +1759,7 @@ object FuzzParityOps extends QueryGroup {
         |  (SELECT CAST(COUNT(DISTINCT z) AS BIGINT) FROM z0 WHERE z = 0.0) AS zero_groups
         |FROM z0""".stripMargin
       val off = s.sql(zeroSelect.replace("FLAG", "0"))
-      val on = withPresto(s) { s.sql(zeroSelect.replace("FLAG", "1")) }
+      val on = withDialect(s, PrestoOperators.ConfKey) { s.sql(zeroSelect.replace("FLAG", "1")) }
       off.union(on).orderBy("fl", "i")
     },
   )

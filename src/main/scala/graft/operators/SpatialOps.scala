@@ -69,10 +69,11 @@ object SpatialOps extends QueryGroup {
     */
   /** KD-B tree node: interior splits carry the axis + threshold so
     * point→leaf lookup is an O(depth) descent, not a linear scan over
-    * the leaf array (the round-11 SpatialStress m100 cliff: 1.6M points
-    * × ~60 leaves of interpreted rectangle tests made the KD-B join
-    * 5.8× slower than the uniform grid; the descent closes that to
-    * parity — see BENCHLOG).
+    * the leaf array (history: in round 11 a since-retired spatial
+    * stress main found a cliff at m100, where 1.6M points × ~60 leaves
+    * of interpreted rectangle tests made the KD-B join 5.8× slower
+    * than the uniform grid; the descent closes that to parity — see
+    * BENCHLOG).
     */
   sealed trait KdbNode extends Serializable
   final case class KdbBranch(onX: Boolean, at: Double,
@@ -155,9 +156,9 @@ object SpatialOps extends QueryGroup {
     * [[distanceJoin]]. The left key is unique per point, so no pair
     * duplicates.
     *
-    * WHY BOTH KEYS (round-11 SpatialStress find): leaf-only joining is
-    * a within-leaf cartesian — the leaf count is bounded by the driver
-    * sample, so per-leaf population grows ∝ N and the join does
+    * WHY BOTH KEYS (history: found by a since-retired round-11 spatial
+    * stress main): leaf-only joining is a within-leaf cartesian — the
+    * leaf count is bounded by the driver sample, so per-leaf population grows ∝ N and the join does
     * Σ|leaf_l|·|leaf_r| work (measured 6.5× slower than the grid at
     * 1.6M points, and heading quadratic). The reference composes its
     * KDB partitioning with a PER-PARTITION R-tree

@@ -743,7 +743,20 @@ object TextOps extends QueryGroup {
     * shared by millions of documents stays one aggregation row — the
     * count census never materializes pairs.
     */
-  def duplicatedSpans(docs: DataFrame, k: Int = 20): DataFrame = {
+  def duplicatedSpans(docs: DataFrame, k: Int = 20): DataFrame =
+    duplicatedSpans(docs, k, None, CensusThreshold)
+
+  /** Hottest-gram position count past which the census picks the salted
+    * plan: the measured trigger where the unsplittable single-task
+    * window sort dominates (BENCHLOG round 12 skew table). */
+  private[graft] val CensusThreshold = 10000000L
+
+  /** [[duplicatedSpans]] with its plan choice opened for specs: `salt`
+    * forces the plan (0/1 = single window, > 1 = salted with that many
+    * buckets) and skips the census; `threshold` moves the census
+    * trigger. */
+  private[graft] def duplicatedSpans(docs: DataFrame, k: Int,
+      salt: Option[Int], threshold: Long): DataFrame = {
     // One shuffle, hashed keys (round-11 rework, A/B'd on the m10 stress
     // corpus: 17.0 → see BENCHLOG): the gram census + join-back pair
     // (two full-corpus shuffles carrying 20-char strings, with the
@@ -757,10 +770,10 @@ object TextOps extends QueryGroup {
     // xxhash64 columns (128 bits — collision odds vanish) for corpora
     // where exactness must hold unconditionally.
     //
-    // Skew (round 12, GramSkewStress): one ultra-hot gram (repeated
-    // boilerplate — real in web data) puts ALL its positions in a
-    // single window partition; the window cannot be split. Setting
-    // spark.graft.exactSubstring.salt = S > 1 switches to a salted
+    // Skew (round 12; history: measured with a since-retired gram-skew
+    // stress main): one ultra-hot gram (repeated boilerplate — real in
+    // web data) puts ALL its positions in a single window partition;
+    // the window cannot be split. A salt S > 1 switches to a salted
     // two-level window: ONE shuffle keyed (salt(doc_id,p) % S, gh) —
     // the hot gram spreads across S tasks — computes per-bucket counts
     // plus a per-bucket representative row. Rows whose bucket count
@@ -774,13 +787,10 @@ object TextOps extends QueryGroup {
     // On non-skewed corpora the single-window plan wins (BENCHLOG skew
     // table), so the salt must only engage when the skew is real.
     //
-    // SELF-TRIGGERING since round 13 (VERDICT ask 6): when the salt conf
-    // is UNSET, a cheap census probe estimates the hottest gram's
-    // position count — per-gram counts over a deterministic 1/16
-    // position sample (hash(doc_id, p)), max × 16 — and auto-selects the
-    // salted plan past `spark.graft.exactSubstring.autoThreshold`
-    // (default 10M positions, the measured trigger where the unsplittable
-    // single-task window sort dominates; GramSkewStress table). The
+    // The census decides (round 13, VERDICT ask 6): a cheap probe
+    // estimates the hottest gram's position count — per-gram counts
+    // over a deterministic 1/16 document sample, max × 16 — and picks
+    // the salted plan (S = 32) past `CensusThreshold`. The
     // probe is one sampled hash-aggregate job (map-side combined, 8-byte
     // keys) — measured ~0.3 s at bench scale (round-14 interleaved
     // auto-on/auto-off A/B: plan 0.40-0.46 s vs 0.10-0.19 s, exec
@@ -792,9 +802,6 @@ object TextOps extends QueryGroup {
     // re-probes. Caveat: same-path data overwritten mid-session reuses
     // the cached decision — consistent with Spark's own session-scoped
     // file-listing caches, and the decision only picks a plan SHAPE.
-    // Explicitly setting the salt conf (0/1 =
-    // single window, >1 = salted) bypasses the probe in both directions;
-    // `spark.graft.exactSubstring.auto=false` disables probing entirely.
     // The decision is recorded in spark.graft.exactSubstring.lastPlan
     // for harness/spec observability.
     val spark = docs.sparkSession
@@ -813,49 +820,40 @@ object TextOps extends QueryGroup {
       Seq(col("doc_id"), col("p"), xxhash64(col("g")).as("gh")) ++
         (if (wideHash) Seq(xxhash64(lit(0x9E3779B9L), col("g")).as("gh2"))
          else Nil): _*)
-    val saltN = spark.conf.getOption("spark.graft.exactSubstring.salt")
-      .map(_.toInt).getOrElse {
-        val auto = spark.conf.getOption("spark.graft.exactSubstring.auto")
-          .forall(_.toBoolean)
-        if (!auto) 0
-        else {
-          val threshold = spark.conf
-            .getOption("spark.graft.exactSubstring.autoThreshold")
-            .map(_.toLong).getOrElse(10000000L)
-          val cacheKey = (docs.queryExecution.analyzed.semanticHash(), k, threshold)
-          val cachedPick = censusCache.get(cacheKey)
-          if (cachedPick != null) {
-            spark.conf.set("spark.graft.exactSubstring.lastPlan",
-              cachedPick._2 + " (cached census)")
-            cachedPick._1.intValue()
-          } else {
-          // DOCUMENT-level sample (filter BEFORE the explode, so the
-          // probe scans 1/16 of the text — position-level sampling costs
-          // a full explode pass, measured +15% on the bench query).
-          // Blind spot: a hot gram confined to ONE giant document is
-          // missed 15/16 of the time — acceptable because that shape's
-          // single-task sort is bounded by max document length, not
-          // corpus size; the cross-document boilerplate that actually
-          // grows with corpus size spans thousands of docs and is
-          // cluster-sampled accurately (stress: est 7.94M vs 7.96M true).
-          val probe = sdocs.where(length(col("text")) >= k)
-            .where(pmod(xxhash64(col("doc_id")), lit(16L)) === 0)
-            .select(col("doc_id"),
-              explode(sequence(lit(1), length(col("text")) - (k - 1))).as("p"),
-              col("text"))
-            .select(xxhash64(col("text").substr(col("p"), lit(k))).as("gh"))
-            .groupBy("gh").agg(count(lit(1)).as("c"))
-            .agg(max(col("c")).as("m")).collect()(0)
-          val est = (if (probe.isNullAt(0)) 0L else probe.getLong(0)) * 16L
-          val pick = if (est > threshold) 32 else 0
-          val plan = s"${if (pick > 1) s"salted-$pick" else "window"}" +
-            s" (hottest-gram census est ~$est positions, threshold $threshold)"
-          spark.conf.set("spark.graft.exactSubstring.lastPlan", plan)
-          censusCache.put(cacheKey, (Integer.valueOf(pick), plan))
-          pick
-          }
-        }
+    val saltN = salt.getOrElse {
+      val cacheKey = (docs.queryExecution.analyzed.semanticHash(), k, threshold)
+      val cachedPick = censusCache.get(cacheKey)
+      if (cachedPick != null) {
+        spark.conf.set("spark.graft.exactSubstring.lastPlan",
+          cachedPick._2 + " (cached census)")
+        cachedPick._1.intValue()
+      } else {
+        // DOCUMENT-level sample (filter BEFORE the explode, so the
+        // probe scans 1/16 of the text — position-level sampling costs
+        // a full explode pass, measured +15% on the bench query).
+        // Blind spot: a hot gram confined to ONE giant document is
+        // missed 15/16 of the time — acceptable because that shape's
+        // single-task sort is bounded by max document length, not
+        // corpus size; the cross-document boilerplate that actually
+        // grows with corpus size spans thousands of docs and is
+        // cluster-sampled accurately (stress: est 7.94M vs 7.96M true).
+        val probe = sdocs.where(length(col("text")) >= k)
+          .where(pmod(xxhash64(col("doc_id")), lit(16L)) === 0)
+          .select(col("doc_id"),
+            explode(sequence(lit(1), length(col("text")) - (k - 1))).as("p"),
+            col("text"))
+          .select(xxhash64(col("text").substr(col("p"), lit(k))).as("gh"))
+          .groupBy("gh").agg(count(lit(1)).as("c"))
+          .agg(max(col("c")).as("m")).collect()(0)
+        val est = (if (probe.isNullAt(0)) 0L else probe.getLong(0)) * 16L
+        val pick = if (est > threshold) 32 else 0
+        val plan = s"${if (pick > 1) s"salted-$pick" else "window"}" +
+          s" (hottest-gram census est ~$est positions, threshold $threshold)"
+        spark.conf.set("spark.graft.exactSubstring.lastPlan", plan)
+        censusCache.put(cacheKey, (Integer.valueOf(pick), plan))
+        pick
       }
+    }
     val dpos =
       if (saltN <= 1) {
         grams

@@ -1,19 +1,33 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, Tables}
 
-/** One-order-of-magnitude corpus synthesizer (round-15 verdict ask #8):
-  * replicates the sf0.1 fixture MULT times with DISJOINT key ranges so
-  * the full 46-query headline set runs at ~sf1 (6M lineitem). Key
-  * shifts keep every join relationship intact (foreign keys shift by
+/** The one scale path: `SfScale 10` writes a ×10 corpus, and `Bench`
+  * over it (`SPARK_GRAFT_SF_DIR=<outDir>`) times the full headline set
+  * at ~sf1 (6M lineitem) into `BENCH_SF1_rNN.json`.
+  *
+  * Replicates the source fixture MULT times with DISJOINT key ranges.
+  * Key shifts keep every join relationship intact (foreign keys shift by
   * the same stride as their parents); region/nation stay fixed (dims).
   * Documents/embeddings replicate with shifted ids — near-dup queries
-  * see a 10x duplicate-saturated corpus, which is exactly the
-  * bucket-cap stress the operators are designed for.
+  * see a ×MULT duplicate-saturated corpus, which is exactly the
+  * bucket-cap stress the operators are designed for. Events replicate
+  * by TIME: copy `rep` moves `ts` by rep × 31 days (past the fixture's
+  * 30-day span, so copies never interleave) with `event_id` shifted and
+  * `user_id` kept. The user count stays fixed and every user's timeline
+  * grows ×MULT — the adversarial direction for the as-of join, the
+  * sessionizer and the sliding windows, which walk per-user ordered runs.
+  *
+  * `_DONE` records the mult and the source directory; a run whose mult
+  * or source differs regenerates the corpus instead of reusing it.
   *
   * Usage: runMain graft.tools.SfScale [mult] [outDir]
+  * (source: SPARK_GRAFT_SF_DIR, default the sf0.1 fixture)
   */
 object SfScale {
   def main(args: Array[String]): Unit = {
@@ -21,24 +35,34 @@ object SfScale {
     val out = args.lift(1).getOrElse(s"/tmp/graft-sf1")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession("graft-sfscale")
-    if (new java.io.File(s"$out/_DONE").exists) {
-      println(s"[sfscale] cached corpus at $out"); spark.stop(); return
+    try build(spark, src, out, mult) finally spark.stop()
+  }
+
+  /** Writes the ×`mult` corpus of `src` to `out`, unless `out/_DONE`
+    * already records this mult and source. */
+  def build(spark: SparkSession, src: String, out: String, mult: Int): Unit = {
+    val done = Paths.get(out, "_DONE")
+    val stamp = s"mult=$mult src=${Paths.get(src).toAbsolutePath.normalize}"
+    if (Files.exists(done) && new String(Files.readAllBytes(done), UTF_8).trim == stamp) {
+      println(s"[sfscale] cached corpus at $out ($stamp)"); return
     }
+    // a half-rewritten corpus must never pass for a finished one
+    Files.deleteIfExists(done)
 
     def load(n: String): DataFrame = Tables.load(spark, src, n)
 
-    def strideOf(df: DataFrame, key: String): Long =
-      df.agg(max(col(key).cast("long"))).collect()(0).getLong(0) + 1
+    def strideOf(df: DataFrame, key: String): Column =
+      lit(df.agg(max(col(key).cast("long"))).collect()(0).getLong(0) + 1)
 
-    // replicate df MULT times shifting the named LONG key columns by
-    // rep*stride (stride = parent table's key stride)
-    def replicate(df: DataFrame, shifts: Map[String, Long]): DataFrame = {
+    // replicate df MULT times, moving each named column by rep × its
+    // per-copy step (a key stride, or an interval for event time)
+    def replicate(df: DataFrame, steps: Map[String, Column]): DataFrame = {
       val reps = spark.range(0, mult).withColumnRenamed("id", "graft_rep")
       val crossed = df.crossJoin(broadcast(reps))
-      shifts.foldLeft(crossed) { case (d, (c, stride)) =>
+      steps.foldLeft(crossed) { case (d, (c, step)) =>
         // preserve the column's dtype (an int key stays int — the x10
         // ranges fit; a silent int->long widening would drift the schema)
-        d.withColumn(c, (col(c).cast("long") + col("graft_rep") * lit(stride))
+        d.withColumn(c, (col(c) + col("graft_rep") * step)
           .cast(df.schema(c).dataType))
       }.drop("graft_rep")
     }
@@ -75,9 +99,8 @@ object SfScale {
     val ev = load("events")
     write("events", replicate(ev,
       Map("event_id" -> strideOf(ev, "event_id"),
-        "user_id" -> (ev.agg(max(col("user_id").cast("long"))).collect()(0).getLong(0) + 1))))
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$out/_DONE"))
+        "ts" -> expr("INTERVAL 31 DAY"))))
+    Files.write(done, stamp.getBytes(UTF_8))
     println(s"[sfscale] corpus x$mult at $out")
-    spark.stop()
   }
 }

@@ -155,4 +155,19 @@ class AggSpec extends AnyFunSuite {
     assert((0 until 5).forall(i => nat.get(i) == chk.get(i)),
       s"delegated arities diverge from native: $nat vs $chk")
   }
+
+  test("merge_khll: merged khyperloglog_agg sketches of two halves match the whole") {
+    // every key x and every uii value lands in both halves, so the merge
+    // unions the minhash key sets AND folds each key's per-uii HLL
+    val r = spark.sql(
+      """WITH t AS (
+        |  SELECT id % 3000 AS x, id % 101 AS uii, id % 2 AS half FROM range(0, 20000))
+        |SELECT
+        |  (SELECT cardinality(merge_khll(k))
+        |   FROM (SELECT half, khyperloglog_agg(x, uii) AS k FROM t GROUP BY half)) AS merged,
+        |  (SELECT cardinality(khyperloglog_agg(x, uii)) FROM t) AS whole""".stripMargin)
+      .collect()(0)
+    assert(r.getLong(1) > 0)
+    assert(r.getLong(0) == r.getLong(1), s"merged ${r.get(0)} vs whole ${r.get(1)}")
+  }
 }

@@ -91,7 +91,8 @@ class SpatialSpec extends AnyFunSuite {
     // round-11 scale fix: the join must key on the radius-grid CELLS as
     // well as the leaf — leaf-only keys are a within-leaf cartesian once
     // per-leaf population outgrows the sample-bounded leaf count
-    // (SpatialStress m100: 4.65 s → 0.81 s; see BENCHLOG)
+    // (round-11 spatial stress m100, a since-retired tool: 4.65 s →
+    // 0.81 s; see BENCHLOG)
     assert(plan.contains("cx") && plan.contains("cy"),
       s"kdb join lost the per-leaf grid-cell key:\n$plan")
   }

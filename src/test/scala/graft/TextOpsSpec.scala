@@ -58,48 +58,35 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("exact-substring salted/wide-hash variants match the default plan") {
-    // the conf-gated skew variants (round 12: salted two-level window,
-    // 128-bit gram key) must emit the IDENTICAL result set — pinned on
+    // the skew variants (round 12: salted two-level window, 128-bit
+    // gram key) must emit the IDENTICAL result set — pinned on
     // the gate corpus, which is rich in cross-doc duplicate grams
     Tables.register(spark, TestSession.sf)
     val docs = spark.table("documents").select(col("doc_id"), col("text"))
     val base = operators.TextOps.duplicatedSpans(docs)
       .orderBy("doc_id").collect().toSeq
     assert(base.nonEmpty, "gate corpus must contain duplicated spans")
-    for ((salt, wide) <- Seq(("5", "false"), ("0", "true"), ("3", "true"))) {
-      spark.conf.set("spark.graft.exactSubstring.salt", salt)
+    def spans(salt: Option[Int], threshold: Long = operators.TextOps.CensusThreshold) =
+      operators.TextOps.duplicatedSpans(docs, 20, salt, threshold)
+        .orderBy("doc_id").collect().toSeq
+    for ((salt, wide) <- Seq((5, "false"), (0, "true"), (3, "true"))) {
       spark.conf.set("spark.graft.exactSubstring.wideHash", wide)
-      try {
-        val v = operators.TextOps.duplicatedSpans(docs)
-          .orderBy("doc_id").collect().toSeq
-        assert(v == base, s"variant salt=$salt wideHash=$wide diverges")
-      } finally {
-        spark.conf.unset("spark.graft.exactSubstring.salt")
-        spark.conf.unset("spark.graft.exactSubstring.wideHash")
-      }
+      try assert(spans(Some(salt)) == base, s"variant salt=$salt wideHash=$wide diverges")
+      finally spark.conf.unset("spark.graft.exactSubstring.wideHash")
     }
-    // the SELF-TRIGGERING census probe (round 13): salt conf unset, a
+    // the SELF-TRIGGERING census probe (round 13): no forced salt, a
     // tiny threshold forces the salted pick, the default keeps the
     // window — both adaptive results equal the base, and the recorded
     // decision names the chosen plan
-    for ((threshold, expectPlan) <- Seq(("1", "salted-32"), (null, "window"))) {
-      if (threshold != null)
-        spark.conf.set("spark.graft.exactSubstring.autoThreshold", threshold)
-      try {
-        val v = operators.TextOps.duplicatedSpans(docs)
-          .orderBy("doc_id").collect().toSeq
-        assert(v == base, s"adaptive (threshold=$threshold) diverges")
-        val plan = spark.conf.get("spark.graft.exactSubstring.lastPlan")
-        assert(plan.startsWith(expectPlan),
-          s"adaptive threshold=$threshold picked [$plan], expected $expectPlan")
-      } finally if (threshold != null)
-        spark.conf.unset("spark.graft.exactSubstring.autoThreshold")
+    for ((threshold, expectPlan) <-
+        Seq((1L, "salted-32"), (operators.TextOps.CensusThreshold, "window"))) {
+      assert(spans(None, threshold) == base, s"adaptive (threshold=$threshold) diverges")
+      val plan = spark.conf.get("spark.graft.exactSubstring.lastPlan")
+      assert(plan.startsWith(expectPlan),
+        s"adaptive threshold=$threshold picked [$plan], expected $expectPlan")
     }
-    // auto=false restores the unconditional single-window plan (no probe)
-    spark.conf.set("spark.graft.exactSubstring.auto", "false")
-    try assert(operators.TextOps.duplicatedSpans(docs)
-      .orderBy("doc_id").collect().toSeq == base)
-    finally spark.conf.unset("spark.graft.exactSubstring.auto")
+    // a forced salt of 0 is the unconditional single-window plan (no probe)
+    assert(spans(Some(0)) == base)
   }
 
   test("minhash LSH pairs are genuinely similar (precision)") {
