@@ -2546,7 +2546,7 @@ object GraftFunctions {
   * place the engine registers functions: injects every Presto-named
   * builder and UDF at session build time (≙ the reference's plugin
   * function namespace, spi/Plugin.java:54 getFunctions), plus the
-  * dialect parser and analyzer/optimizer rules.
+  * dialect parser, analyzer/optimizer rules and the AQE stage-prep rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -2568,5 +2568,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => graft.plans.EmptyGroupingSetsRule)
     ext.injectResolutionRule(_ => graft.plans.ZonedGroupingRule)
     ext.injectOptimizerRule(_ => graft.plans.SimplifyElementAt)
+    ext.injectQueryStagePrepRule(_ => graft.plans.GatherSmallSort)
   }
 }

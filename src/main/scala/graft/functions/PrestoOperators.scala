@@ -117,8 +117,9 @@ object PrestoOperators {
     // COVERAGE.md; the reference's connectors expose no interval-typed
     // table columns, so the shape cannot appear in a ported query's
     // scans).
-    // interval+interval stays stock (left cannot be a TIME, and wrapping
-    // would skip the analyzer's interval field-range coercion)
+    // interval+interval stays stock when the parser can see both sides
+    // are intervals (left cannot be a TIME); an interval-typed column on
+    // the left is wrapped and widened in the replacement
     case Add(l, r, _) if intervalish(r) && !intervalish(l) =>
       PrestoTimeIntervalAdd(l, r, negate = false)
     case Add(l, r, _) if intervalish(l) && !intervalish(r) =>
@@ -413,7 +414,22 @@ case class PrestoTimeIntervalAdd(left: Expression, right: Expression,
       TimestampAddInterval(Cast(left, TimestampType, timeZoneId), ivx, timeZoneId)
     case (_: StringType, _: YearMonthIntervalType) =>
       TimestampAddYMInterval(Cast(left, TimestampType, timeZoneId), ivx, timeZoneId)
+    // interval ± interval where the left is an interval-typed column the
+    // parser could not see: the analyzer first widens both operands to
+    // one interval type (AnsiTypeCoercion.findWiderTypeForTwo)
+    case (l: DayTimeIntervalType, r: DayTimeIntervalType) =>
+      arith(DayTimeIntervalType(
+        l.startField.min(r.startField), l.endField.max(r.endField)))
+    case (l: YearMonthIntervalType, r: YearMonthIntervalType) =>
+      arith(YearMonthIntervalType(
+        l.startField.min(r.startField), l.endField.max(r.endField)))
     case _ => if (negate) Subtract(left, right) else Add(left, right)
+  }
+
+  /** left ± right, both operands cast to the interval type `t`. */
+  private def arith(t: DataType): Expression = {
+    def as(e: Expression) = if (e.dataType == t) e else Cast(e, t)
+    if (negate) Subtract(as(left), as(right)) else Add(as(left), as(right))
   }
 
   override protected def withNewChildrenInternal(

@@ -43,9 +43,23 @@ object BpeOps extends QueryGroup {
   val EndMark = "</w>"
 
   /** Normalization shared by trainer, encoder, and the DuckDB oracle:
-    * lowercase, non-alphanumerics to spaces, whitespace-split. */
-  def words(text: String): Array[String] =
-    text.toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9 ]", " ").split(" +").filter(_.nonEmpty)
+    * lowercase, non-alphanumerics to spaces, whitespace-split — that is,
+    * the maximal `[a-z0-9]` runs of the lowercased text, found in one
+    * pass with no regex (a `replaceAll`/`split` pair compiles two
+    * `Pattern`s per document). */
+  def words(text: String): Array[String] = {
+    val s = text.toLowerCase(java.util.Locale.ROOT)
+    val out = Array.newBuilder[String]
+    var start = -1
+    var i = 0
+    while (i <= s.length) {
+      val c = if (i < s.length) s.charAt(i) else ' '
+      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) { if (start < 0) start = i }
+      else if (start >= 0) { out += s.substring(start, i); start = -1 }
+      i += 1
+    }
+    out.result()
+  }
 
   /** One BPE merge step applied to a symbol sequence (all non-overlapping
     * occurrences, left to right — the canonical rule). */

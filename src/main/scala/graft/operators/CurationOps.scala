@@ -33,9 +33,14 @@ object CurationOps extends QueryGroup {
   private def tokensCol: Column =
     regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
 
-  /** Word n-grams of a *bound* token attribute. Callers must keep a
-    * projection barrier (filter on size) between tokenization and this
-    * lambda — see TextOps.withShingles for the measured collapse pitfall.
+  /** Word n-grams of a *bound* token attribute: callers compute
+    * `tokens` in its own projection and call this inside a generator, so
+    * the lambda reads the attribute instead of re-running the tokenize
+    * expression per element (see TextOps.withShingles for the measured
+    * collapse pitfall). Callers guard `size(tokens) >= n` inside the
+    * generator — `explode(when(…))`, an explode of NULL emits no rows —
+    * rather than with a row filter: a filter is pushed through Spread's
+    * repartition and would tokenize every document once more below it.
     */
   private def ngramsCol(tokens: Column, n: Int): Column =
     transform(
@@ -108,10 +113,10 @@ object CurationOps extends QueryGroup {
     // map-side work on a one-split gate fixture — see Spread
     val toks = Spread.bySize(docs, col("doc_id"))
       .withColumn("tokens", tokensCol)
-      .filter(size(col("tokens")) >= 5)
     val grams = toks.select(
       col("doc_id"),
-      explode(array_distinct(ngramsCol(col("tokens"), 5))).as("gram"))
+      explode(when(size(col("tokens")) >= 5,
+        array_distinct(ngramsCol(col("tokens"), 5)))).as("gram"))
     val evalGrams = grams.filter(col("doc_id") % 20 === 0).select("gram").distinct()
     grams.filter(col("doc_id") % 20 =!= 0)
       .join(broadcast(evalGrams), Seq("gram"))
@@ -536,14 +541,16 @@ object CurationOps extends QueryGroup {
         .select(col("doc_id"),
           array_join(regexp_extract_all(lower(col("text")),
             lit("[a-z0-9]+"), lit(0)), " ").as("t"))
-        .filter(length(col("t")) >= 3)
       // two-level extraction: a tiny interpreted lambda cuts t into
       // ~len/64 overlapping 66-char chunks, then a codegen'd
       // explode+substring walks each chunk — so no interpreted work is
-      // O(len) and no exploded row carries more than 66 chars
+      // O(len) and no exploded row carries more than 66 chars. The
+      // length(t) >= 3 guard sits in the generator, not in a row filter
+      // that would be pushed below the spread and normalize twice.
       val chunks = norm.select(col("doc_id"), explode(expr(
-        "transform(sequence(1, CAST(ceil((length(t) - 2) / 64.0) AS INT)), " +
-          "j -> substring(t, (j - 1) * 64 + 1, 66))")).as("ck"))
+        "CASE WHEN length(t) >= 3 THEN transform(sequence(1, " +
+          "CAST(ceil((length(t) - 2) / 64.0) AS INT)), " +
+          "j -> substring(t, (j - 1) * 64 + 1, 66)) END")).as("ck"))
         .filter(length(col("ck")) >= 3)
       val grams = chunks
         .select(col("doc_id"), col("ck"),
@@ -603,12 +610,14 @@ object CurationOps extends QueryGroup {
          |ORDER BY doc_id""".stripMargin) { (s, _) =>
       val toks = Spread.bySize(s.table("documents"), col("doc_id"))
         .withColumn("tokens", tokensCol)
-        .filter(size(col("tokens")) >= 2)
+      // docs under 2 tokens have no 2-gram, so the inner join with `rep`
+      // drops their stats row
       val tokStats = toks.select(col("doc_id"),
         size(col("tokens")).as("n_tokens"),
         size(array_distinct(col("tokens"))).as("n_unique"))
       val gramCnt = toks
-        .select(col("doc_id"), explode(ngramsCol(col("tokens"), 2)).as("gram"))
+        .select(col("doc_id"),
+          explode(when(size(col("tokens")) >= 2, ngramsCol(col("tokens"), 2))).as("gram"))
         .groupBy("doc_id", "gram")
         .agg(count(lit(1)).as("c"))
       val rep = gramCnt.groupBy("doc_id").agg(

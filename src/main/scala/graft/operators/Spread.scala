@@ -31,6 +31,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   * window, none of which depend on partitioning or row order. The hash
   * keys make task assignment deterministic (no round-robin, so no
   * sort-before-repartition pass and no retry-sensitivity).
+  *
+  * Filters are pushed through the repartition (Catalyst's
+  * PushPredicateThroughNonJoin treats it as order-free), so a row filter
+  * written above `bySize` runs in the single-task scan stage below it —
+  * and a filter on a derived column re-runs that derivation there. Put
+  * size guards on derived arrays inside the generator instead
+  * (`explode(when(size(tokens) >= n, …))`, as CurationOps does).
   */
 object Spread {
 

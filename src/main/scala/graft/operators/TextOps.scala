@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design:
   *  - normalization/shingling/minhash signatures are computed entirely
-  *    map-side with codegen'd array lambdas — zero shuffle until the
-  *    band-bucket join;
+  *    map-side — zero shuffle until the band-bucket join. The array
+  *    lambdas (`transform`) run interpreted: `ArrayTransform` is
+  *    `CodegenFallback` in Spark 4.1.2, so hot per-element work is kept
+  *    out of lambdas where it can be (explode + codegen'd expressions);
   *  - MinHash-LSH shuffles only (band, signature) keys — candidate
   *    generation is linear, never all-pairs;
   *  - the exact-Jaccard verifier runs only on LSH candidates;

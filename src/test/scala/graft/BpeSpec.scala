@@ -92,6 +92,21 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
+  test("words equals the regex normalization on 2000 seeded-random strings") {
+    def regexWords(text: String): Array[String] =
+      text.toLowerCase(java.util.Locale.ROOT).replaceAll("[^a-z0-9 ]", " ").split(" +").filter(_.nonEmpty)
+    // upper case, digits, punctuation, whitespace other than ' ', and
+    // non-ASCII letters — 'İ' lowercases to two chars ("i" + U+0307)
+    val alphabet = "aZz09 Q.,-_!?\t\n  éÉßİΣσЖ€✓".toVector
+    val rng = new scala.util.Random(7)
+    (0 until 2000).foreach { _ =>
+      val text = Seq.fill(rng.nextInt(40))(alphabet(rng.nextInt(alphabet.length))).mkString
+      assert(BpeOps.words(text).toSeq == regexWords(text).toSeq, s"words differ for '$text'")
+    }
+    assert(BpeOps.words("İstanbul").toSeq == Seq("i", "stanbul"))
+    assert(BpeOps.words("").isEmpty && BpeOps.words(" .. ").isEmpty)
+  }
+
   test("queries run on the fixture: train rows and tokenize lossless") {
     val train = SparkEntry.queries("pipe_bpe_train")(spark, TestSession.sf).collect()
     assert(train.length > 50)

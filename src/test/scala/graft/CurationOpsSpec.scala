@@ -43,6 +43,36 @@ class CurationOpsSpec extends AnyFunSuite {
       "a sort-merge join on the gram key would shuffle the full corpus")
   }
 
+  test("sf0.01: no regex runs below the spread exchange (size guards sit in the generators)") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    // Spread's repartition lets filters through, so a row filter on the
+    // token count would tokenize every document once more in the
+    // single-task scan stage below the exchange
+    Seq("dd_decontaminate", "tx_perplexity", "tx_repetition").foreach { name =>
+      val s = spark.newSession()
+      // tx_perplexity tokenizes inside an eager localCheckpoint job, so
+      // the plans of the executions run while building count too
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.sparkPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+      plans.add(SparkEntry.queries(name)(s, "/root/testdata/sf0.01").queryExecution.sparkPlan)
+      org.apache.spark.sql.graft.BusDrain(s.sparkContext)
+      val spreads = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(_.collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      })
+      assert(spreads.nonEmpty, s"$name: no spread exchange at sf0.01")
+      spreads.foreach { e =>
+        val below = e.child.collect { case p => p.expressions }.flatten
+        assert(!below.exists(_.exists(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.RegExpExtractBase])),
+          s"$name: regex below the spread exchange:\n$e")
+      }
+    }
+  }
+
   test("sample_stratified: rank filter pushes into WindowGroupLimit") {
     val p = run("sample_stratified").queryExecution.executedPlan.toString
     assert(p.contains("WindowGroupLimit"),

@@ -16,6 +16,20 @@ class FuzzParitySpec extends AnyFunSuite {
   private def run(name: String) =
     SparkEntry.queries(name)(spark, TestSession.sf).collect()
 
+  test("every sweep builds and runs on a session with spark.graft.prestoOperators=true") {
+    val s = spark.newSession()
+    s.conf.set(functions.PrestoOperators.ConfKey, "true")
+    val failures = operators.FuzzParityOps.defs.flatMap { d =>
+      try { d.run(s, TestSession.sf).collect(); None }
+      catch { case e: Exception => Some(s"${d.name}: ${e.getMessage.take(400)}") }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+    // the flag changes no interval semantics: an interval-typed column
+    // plus an interval literal reads the same under it
+    val flagged = SparkEntry.queries("fuzz_interval_parity")(s, TestSession.sf).collect().toSeq
+    assert(flagged == run("fuzz_interval_parity").toSeq)
+  }
+
   test("math sweep: 400 rows, LCG operands pinned, spot values") {
     val rows = run("fuzz_math_parity")
     assert(rows.length == 400)
