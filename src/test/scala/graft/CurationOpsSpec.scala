@@ -46,6 +46,7 @@ class CurationOpsSpec extends AnyFunSuite {
   test("sf0.01: no regex runs below the spread exchange (size guards sit in the generators)") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val sf001 = new java.io.File(TestSession.sf).getParent + "/sf0.01"
     // Spread's repartition lets filters through, so a row filter on the
     // token count would tokenize every document once more in the
     // single-task scan stage below the exchange
@@ -58,7 +59,7 @@ class CurationOpsSpec extends AnyFunSuite {
         def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.sparkPlan)
         def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       })
-      plans.add(SparkEntry.queries(name)(s, "/root/testdata/sf0.01").queryExecution.sparkPlan)
+      plans.add(SparkEntry.queries(name)(s, sf001).queryExecution.sparkPlan)
       org.apache.spark.sql.graft.BusDrain(s.sparkContext)
       val spreads = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(_.collect {
         case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
