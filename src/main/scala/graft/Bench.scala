@@ -59,7 +59,7 @@ object Bench {
     // grid-bucketed polygon-polygon join
     "tpcds_q67", "tpcds_q51", "tpcds_q10", "spatial_polygon_join",
     // round-5 additions: the cross-channel INTERSECT composite, the
-    // 4-way CTE self-join (exchange reuse), duplicate clustering over
+    // year-over-year per-customer pivot, duplicate clustering over
     // the LSH candidate pairs (the linear production path — the exact
     // quadratic twin dd_jaccard_clusters lives in the correctness gate,
     // not here), and the KD-B-partitioned distance join

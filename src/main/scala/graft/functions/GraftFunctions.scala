@@ -2546,7 +2546,8 @@ object GraftFunctions {
   * place the engine registers functions: injects every Presto-named
   * builder and UDF at session build time (≙ the reference's plugin
   * function namespace, spi/Plugin.java:54 getFunctions), plus the
-  * dialect parser, analyzer/optimizer rules and the AQE stage-prep rule.
+  * dialect parser, analyzer/optimizer rules (among them the shared-CTE
+  * rules, `graft.plans.SharedCte`) and the AQE stage-prep rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -2567,7 +2568,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => graft.functions.PrestoComparisonRule)
     ext.injectResolutionRule(_ => graft.plans.EmptyGroupingSetsRule)
     ext.injectResolutionRule(_ => graft.plans.ZonedGroupingRule)
+    ext.injectPostHocResolutionRule(_ => graft.plans.SharedCte.Keep)
     ext.injectOptimizerRule(_ => graft.plans.SimplifyElementAt)
+    ext.injectOptimizerRule(_ => graft.plans.SharedCte.Release)
+    ext.injectPreCBORule(_ => graft.plans.SharedCte.NarrowByGroupingKeys)
     ext.injectQueryStagePrepRule(_ => graft.plans.GatherSmallSort)
   }
 }

@@ -22,12 +22,15 @@ class ConfigMatrixSpec extends AnyFunSuite {
     // partsupp, and a partsupp-heavy verbatim text (count DISTINCT
     // through the synth views)
     "q02_min_cost_supplier", "dialect_q16_verbatim",
-    // round 5: the multi-reference CTE composite — AQE changes its
-    // physical plan dramatically (inlined CTE instances reuse exchanges
-    // only with AQE OFF: 13 vs 57 scans, measured), so pin that the
-    // RESULT is identical either way; and the clustering iteration,
-    // whose convergence must not depend on partition count
-    "tpcds_q14", "dd_jaccard_clusters",
+    // the multi-reference CTE texts that graft.plans.SharedCte shares:
+    // each shared CTE runs as one shuffle that AQE reuses from its stage
+    // cache and static planning from ReuseExchange, so pin that the
+    // RESULT is identical either way — q14 (cross_items and avg_sales,
+    // three references each), q75 (all_sales, two year-filtered
+    // references), q23 (three shared CTEs, one of them feeding a scalar
+    // subquery); and the clustering iteration, whose convergence must
+    // not depend on partition count
+    "tpcds_q14", "tpcds_q75", "tpcds_q23", "dd_jaccard_clusters",
     // round 6: the 17-table join (join order/strategy must not change
     // rows), the stream-stream join's batch twin, the embedding
     // bucket-join dedup path, and the SHOW STATS one-pass multi-distinct

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{TpcdsQueries, TpcdsSynth}
+import graft.operators.TpcdsSynth
 
 /** Scale + semantics pins for the adapted TPC-DS corpus (TpcdsQueries /
   * TpcdsSynth). Correctness is oracle-gated; these tests pin what the
@@ -60,27 +60,60 @@ class TpcdsSpec extends AnyFunSuite {
       "existence checks must plan as joins")
   }
 
-  test("q64: the 17-table join plans without cartesian, dims broadcast") {
+  test("q64: the 17-table join plans without cartesian, dims broadcast, cross_sales once") {
     // the corpus' widest join graph: every dim join must stay keyed
     // (broadcast or shuffle), never degrade to a cross product — at
-    // 100 TB a single accidental cartesian in this graph is fatal.
-    // Round 15 materializes the twice-referenced cross_sales CTE once
-    // (the q14 treatment, kills the per-run AQE/janino replan storm), so
-    // the 17-table properties are asserted on the MATERIALIZATION plan
-    // and the outer query must be a keyed 2-table self-join of it.
-    SparkEntry.queries("tpcds_q64")(spark, TestSession.sf) // views + warm
-    val inner = spark.sql(
-      "WITH cs_ui AS (\n" +
-        TpcdsQueries.q64CsUiBody.replace("tpcds.", "graft_tpcds_") + "\n)\n" +
-        TpcdsQueries.q64CrossBody.replace("tpcds.", "graft_tpcds_"))
-      .queryExecution.executedPlan.toString
-    assert(!inner.contains("CartesianProduct"),
-      s"cartesian in q64 cross_sales:\n${inner.take(4000)}")
-    assert(inner.contains("BroadcastHashJoin"),
-      "q64's generated dims must broadcast")
-    val p = plan("tpcds_q64")
-    assert(!p.contains("CartesianProduct"), s"cartesian in q64 outer:\n${p.take(4000)}")
-    assert(p.contains("Join"), "outer self-join must be a keyed join")
+    // 100 TB a single accidental cartesian in this graph is fatal. The
+    // twice-referenced cross_sales CTE is shared (graft.plans.SharedCte):
+    // its 17-table join runs once, as one exchange that the second
+    // reference reuses. Read on the static plan (AQE off): at sf0.001
+    // AQE's final plan collapses to an empty relation.
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_NONE, ReusedExchangeExec, ShuffleExchangeExec}
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (plan, formatted) =
+      try {
+        val qe = SparkEntry.queries("tpcds_q64")(spark, TestSession.sf).queryExecution
+        (qe.executedPlan, qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val p = plan.toString
+    assert(!p.contains("CartesianProduct"), s"cartesian in q64:\n${p.take(4000)}")
+    assert(p.contains("BroadcastHashJoin"), "q64's generated dims must broadcast")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      s"the cs1/cs2 self-join must be a keyed join:\n${p.take(4000)}")
+    def shared(e: ShuffleExchangeExec) = e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE
+    val exchanges = plan.collect { case e: ShuffleExchangeExec if shared(e) => e }
+    val reuses = plan.collect {
+      case r @ ReusedExchangeExec(_, e: ShuffleExchangeExec) if shared(e) => r
+    }
+    assert(exchanges.size == 1 && reuses.size == 1,
+      s"cross_sales must run as one exchange plus its reuse:\n${p.take(4000)}")
+    // formatted mode lists each physical node once: the four
+    // lineitem-backed facts (store/catalog sales and returns), once each
+    val factScans =
+      "(?m)^\\([0-9]+\\) Scan parquet spark_catalog\\.tpcds\\.base_lineitem".r
+        .findAllIn(formatted).length
+    assert(factScans == 4, s"q64 must scan each lineitem-backed fact once, " +
+      s"found $factScans:\n${formatted.take(4000)}")
+  }
+
+  test("q11 and q04: the year filter on year_total reaches date_dim below the aggregate") {
+    // the adapted corpus reads date_dim as a local relation, so the
+    // optimizer evaluates the pushed d_year filter into its rows
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+    for ((q, channels) <- Seq("tpcds_q11" -> 2, "tpcds_q04" -> 3)) {
+      val opt = SparkEntry.queries(q)(spark, TestSession.sf).queryExecution.optimizedPlan
+      val dateDims = opt.collect { case a: Aggregate => a }.flatMap(_.collect {
+        case l: LocalRelation if l.output.exists(_.name == "d_year") => l
+      }).distinct
+      val years = dateDims.map { l =>
+        val i = l.output.indexWhere(_.name == "d_year")
+        l.data.map(_.getInt(i)).toSet
+      }
+      assert(dateDims.size == channels && years.forall(_ == Set(1999, 2000)),
+        s"$q: one date_dim per channel below the aggregate, holding 1999 and 2000 only " +
+          s"(years $years):\n$opt")
+    }
   }
 
   test("q22: rollup grand-total row equals the ungrouped average") {
