@@ -1,23 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graft.BusDrain
-
-/** Counts the jobs a SparkContext starts while it is registered —
-  * sampling, broadcast and subquery jobs included. `jobs` drains the
-  * listener bus first, so every job started before the call is counted.
-  */
-final class JobCounter(sc: SparkContext) extends SparkListener {
-  private val started = new AtomicInteger
-  sc.addSparkListener(this)
-  override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-  def jobs: Int = { BusDrain(sc); started.get }
-  def close(): Unit = sc.removeSparkListener(this)
-}
-
 /** Benchmark main, mirroring the reference's protocol (BASELINE.md:
   * prewarm runs then measured runs — reference presto-benchto-benchmarks
   * tpch.yaml:3-4 uses 2 prewarm + 6 measured; we default to 1 prewarm +
@@ -26,8 +8,9 @@ final class JobCounter(sc: SparkContext) extends SparkListener {
   * (load-robust); the JSON line also carries the median and the raw
   * per-run times so machine-load contamination is visible without a
   * re-run. Prints ONE JSON line the driver collects into BENCH_r{N}.json.
-  * bench_detail.json also records the jobs each query's best run started
-  * (a work count that, unlike wall time, does not move with host load).
+  * bench_detail.json also records from each query's best run's
+  * `QueryTrace` the jobs it started (a work count that, unlike wall
+  * time, does not move with host load) and its `layers`.
   */
 object Bench {
 
@@ -210,6 +193,20 @@ object Bench {
     }
   }
 
+  /** One query's `layers` (docs/OPERATIONS.md §4 gives each field's source). */
+  private def layersJson(t: QueryTrace): String = {
+    def str(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    def obj(fields: (String, Any)*) = fields.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    def arr(items: Seq[Any]) = items.mkString("[", ",", "]")
+    obj("build_ms" -> t.buildMs, "eager_jobs" -> t.eagerJobs, "eager_union_ms" -> t.eagerUnionMs,
+      "optimize_ms" -> t.optimizeMs, "physical_ms" -> t.physicalMs,
+      "top_rules" -> obj(t.topRules.map { case (r, ms) => r -> math.round(ms) }: _*),
+      "jobs" -> t.jobs, "job_union_ms" -> t.jobUnionMs, "driver_gap_ms" -> t.driverGapMs,
+      "gc_ms" -> t.gcMs, "janino_compiles" -> t.compiles, "jit_ms" -> t.jitMs,
+      "decisions" -> arr(t.decisions.map(d => obj("name" -> str(d.name), "choice" -> str(d.choice)))),
+      "stages" -> arr(t.stages.map(s => arr(s.productIterator.toSeq))))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val prewarm = sys.env.getOrElse("SPARK_GRAFT_PREWARM", "1").toInt
@@ -220,18 +217,10 @@ object Bench {
       .map(_.split(',').map(_.trim).toSet)
     CodegenFallbackGate.install()
     val spark = GraftSession("graft-bench")
-    val jobCounter = new JobCounter(spark.sparkContext)
 
-    /** One run: its wall seconds and the jobs it started. */
-    def execute(name: String): (Double, Int) = {
-      val j0 = jobCounter.jobs
-      val t0 = System.nanoTime()
-      // noop sink: full execution, no driver-side collection
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      (secs, jobCounter.jobs - j0)
-    }
+    /** One run to the noop sink: full execution, no driver-side collection. */
+    def execute(name: String): QueryTrace =
+      QueryTrace(spark)(SparkEntry.queries(name)(spark, sfDir))
 
     // Load-robust protocol (round-4 postmortem: a loaded machine
     // contaminated the recorded medians with no way to tell noise from
@@ -265,10 +254,10 @@ object Bench {
     // A query that throws is listed in the artifact's "failed" and makes
     // the run exit nonzero; its -1.0 sentinel never enters a total.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def fail(name: String, e: Throwable): Seq[(Double, Int)] = {
+    def fail(name: String, e: Throwable): Seq[QueryTrace] = {
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
       failed += name
-      Seq((-1.0, 0))
+      Nil
     }
     // Round-16 lockstep (VERDICT r15 ask #1): the sides alternate per
     // RUN — H,C,H,C… — so each HEAD run and its control partner sit in
@@ -276,8 +265,8 @@ object Bench {
     // straddle one side's whole block (the r15 failure mode that shipped
     // two false 4.7–6.8x code-mover flags). Without a control only the
     // HEAD runs execute and the control minimum is None. HEAD runs come
-    // back fastest first, each with its job count.
-    def measureLockstep(name: String, nRuns: Int): (Seq[(Double, Int)], Option[Double]) = {
+    // back fastest first; a failed query returns none.
+    def measureLockstep(name: String, nRuns: Int): (Seq[QueryTrace], Option[Double]) = {
       val ctrl = scala.collection.mutable.ArrayBuffer[Double]()
       val head =
         try {
@@ -288,19 +277,20 @@ object Bench {
             val h = execute(name)
             control.flatMap(_.runOnce(name)).foreach(ctrl += _)
             h
-          }.sortBy(_._1)
+          }.sortBy(_.wallMs)
         } catch {
           case e: Throwable => fail(name, e)
         }
       (head, if (ctrl.isEmpty) None else Some(ctrl.min))
     }
-    val bestJobs = scala.collection.mutable.LinkedHashMap[String, Int]()
+    // the best run's jobs and layers, as JSON: no plan outlives its query
+    val best = scala.collection.mutable.LinkedHashMap[String, (Int, String)]()
     val results = headline
       .filter(n => only.forall(_.contains(n))).map { name =>
       val (timed, ctrlMin) = measureLockstep(name, runs)
       ctrlMin.foreach(controlTimes(name) = _)
-      bestJobs(name) = timed.head._2
-      name -> timed.map(_._1)
+      timed.headOption.foreach(t => best(name) = (t.eagerJobs + t.jobs, layersJson(t)))
+      name -> (if (timed.isEmpty) Seq(-1.0) else timed.map(_.wallMs / 1e3))
     }
 
     def fmt(v: Double) = f"$v%.3f"
@@ -311,7 +301,8 @@ object Bench {
       .mkString("{", ",", "}")
     val raw = results.map { case (k, t) => "\"" + k + "\":[" + t.map(fmt).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val jobs = bestJobs.map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val jobs = best.map { case (k, (n, _)) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val layers = best.map { case (k, (_, l)) => "\"" + k + "\":" + l }.mkString("{", ",", "}")
     val total = results.map(_._2.head).filter(_ >= 0).sum
     val totalMedian = results.map { case (_, t) => t(t.size / 2) }.filter(_ >= 0).sum
     // Tail-anomaly gate (round-8 verdict: raw-run spread kept catching
@@ -373,7 +364,7 @@ object Bench {
     val confirmedMovers = suspects.flatMap { case (k, r0) =>
       val n0 = r0 / medianRatio
       val (ts, ctrlMin) = measureLockstep(k, math.max(3, runs - 2))
-      val n1 = (for { c <- ctrlMin if c > 0; h = ts.head._1 if h > 0 }
+      val n1 = (for { c <- ctrlMin if c > 0; h <- ts.headOption.map(_.wallMs / 1e3) }
         yield (h / c) / medianRatio).getOrElse(n0)
       retries(k) = (n0, n1)
       if (n1 > 1.15) Some(k -> math.min(n0, n1)) else None
@@ -389,7 +380,7 @@ object Bench {
     val controlJson =
       if (control.isEmpty) "\"control\":null"
       else f""""control":{"tag":"$controlTag","total":$controlTotal%.3f,"queries":$ctrlQs,"ratio":$ratioJson,"median_ratio":$medianRatio%.2f,"code_movers":$codeMovers,"mover_retries":$retryJson,"ratio_gate":"normalized>1.15, retry-confirmed"}"""
-    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"jobs":$jobs,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$controlJson,"sf":"$sfDir","cores":${GraftSession.cores}}"""
+    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","estimator":"min-of-$runs%d","queries":$qs,"queries_median":$medians,"total_median":$totalMedian%.3f,"raw_runs":$raw,"jobs":$jobs,"layers":$layers,"tail_flags":$tailFlags,"codegen_fallbacks":$fallbacks,"failed":$failedJson,$controlJson,"sf":"$sfDir","cores":${GraftSession.cores}}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       detail.getBytes("UTF-8"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,11 +157,13 @@ object BpeOps extends QueryGroup {
     * the corpus, cross into driver memory. */
   val TopWords = 50000
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Vector[(Int, String, String, Long)]]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
+    (Vector[(Int, String, String, Long)], Broadcast[Map[(String, String), Int]])]()
 
-  /** Word counts → driver → merge loop, cached per (session, dir). */
-  def trainedMerges(s: SparkSession, dir: String): Vector[(Int, String, String, Long)] =
+  /** Word counts → driver → merge loop, cached per (session, dir) with
+    * the merges' rank table, broadcast once: every tokenize build shares
+    * its broadcast id, and with it the executors' warm encode memo. */
+  def trained(s: SparkSession, dir: String) =
     cache.computeIfAbsent((s, dir), _ => {
       val wordsUdf = udf((t: String) => words(if (t == null) "" else t))
       val freq = Spread.bySize(s.table("documents"), col("doc_id"))
@@ -171,7 +174,8 @@ object BpeOps extends QueryGroup {
         .collect()
         .map(r => (r.getString(0), r.getLong(1)))
         .toSeq
-      train(freq, NumMerges)
+      val merges = train(freq, NumMerges)
+      (merges, s.sparkContext.broadcast(merges.map { case (rank, l, r, _) => (l, r) -> rank }.toMap))
     })
 
   def defs = Seq(
@@ -180,7 +184,7 @@ object BpeOps extends QueryGroup {
     // sequence against an independent recount trainer
     qNoOracle("pipe_bpe_train") { (s, dir) =>
       import s.implicits._
-      trainedMerges(s, dir)
+      trained(s, dir)._1
         .map { case (rank, l, r, c) => (rank, l, r, l + r, c) }
         .toDF("rank", "left", "right", "merged", "pair_count")
     },
@@ -201,9 +205,7 @@ object BpeOps extends QueryGroup {
         |                t -> t <> '') AS tokens
         |  FROM documents)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val ranks = trainedMerges(s, dir)
-        .map { case (rank, l, r, _) => (l, r) -> rank }.toMap
-      val bc = s.sparkContext.broadcast(ranks)
+      val bc = trained(s, dir)._2
       val tokenizeUdf = udf((t: String) => {
         val ws = words(if (t == null) "" else t)
         var bounded = true

@@ -4,6 +4,7 @@ import graft.QueryGroup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Decision
 
 /** Training-data text pipeline: deduplication + text analysis over the
   * `documents` table. These extend the reference's surface (it has no
@@ -25,7 +26,7 @@ import org.apache.spark.sql.functions._
 object TextOps extends QueryGroup {
 
   /** Census decisions for the exact-substring adaptive salt, keyed by
-    * (input plan semanticHash, k, threshold) → (picked salt, lastPlan
+    * (input plan semanticHash, k, threshold) → (picked salt, decision
     * text): the probe is a real job (~0.3 s at bench scale — round-14
     * A/B), so repeated invocations over the same input reuse the
     * decision instead of re-probing.
@@ -575,42 +576,38 @@ object TextOps extends QueryGroup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Connected components over an undirected pair graph (doc_a, doc_b) by
-    * alternating min-label propagation: each round every node takes the
-    * minimum label among itself and its neighbors; convergence in
-    * O(component diameter) rounds. Returns (id, label) with label = the
-    * smallest doc_id in the component. Near-dup components are small and
-    * shallow (mutual similarity groups), so the diameter bound is the
-    * right production shape; a corpus with adversarially long chains
-    * would want the O(log n)-round large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce") — implemented
-    * below as connectedComponentsLogN, swapping in behind the same
-    * (pairs → labels) contract. Each round is one
-    * shuffle (groupBy on dst); `localCheckpoint` truncates the growing
-    * lineage (on a real cluster: `checkpoint` to reliable storage).
+  /** Connected components over an undirected pair graph (doc_a, doc_b):
+    * (id, label) with label = the smallest doc_id in the component.
+    *
+    * `driverMaxEdges` is the edge-count ceiling for the driver
+    * union-find path — the order of magnitude Spark itself collects for
+    * a broadcast relation (1M (long,long) edges ≈ 16 MB); 0 forces the
+    * distributed path, which alternates large-star / small-star contraction
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14): a path graph of diameter d converges in O(log d) rounds,
+    * so adversarially long chains need no diameter-sized cap. Each round
+    * is two grouped aggregations + joins; edges are kept canonical
+    * (lo < hi) and deduped, so the edge set shrinks toward the star
+    * forest and convergence is edge-set stability (count + an
+    * order-independent hash fingerprint). `localCheckpoint` truncates
+    * the growing lineage (on a real cluster: `checkpoint` to reliable
+    * storage). A graph that does not stabilize within `maxIters` rounds
+    * throws rather than return partial, wrong labels.
     */
-  /** `driverMaxEdges` is the edge-count ceiling for the driver
-    * union-find fast path — the same order of magnitude Spark itself
-    * collects for a broadcast relation (1M (long,long) edges ≈ 16 MB).
-    * The path is chosen by measured edge count at run time, so
-    * corpus-scale graphs always take the distributed loop; 0 forces it.
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
       driverMaxEdges: Long = 1000000L): DataFrame = {
-    // materialize the pair generation ONCE before mirroring: the union
-    // references `pairs` twice, and without this the (possibly
-    // quadratic) pair join runs twice — measured 11.6 s → 6 s at sf0.1
-    // on the exact-Jaccard graph
-    val p0 = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+    // materialize the pair generation ONCE: the edge count and either
+    // path both read it, and without this the (possibly quadratic) pair
+    // join runs twice —
+    // measured 11.6 s → 6 s at sf0.1 on the exact-Jaccard graph
+    val p0 = pairs.select(col("doc_a").as("a"), col("doc_b").as("b")).localCheckpoint(true)
     // Small-graph fast path (round 16, guide §1.2: the distributed loop
-    // costs ~5 scheduler round-trips per round REGARDLESS of size —
+    // costs several scheduler round-trips per round REGARDLESS of size —
     // pure latency when the pair graph is tiny). Counting the
     // checkpointed edges is one cheap job; under the broadcast-sized
     // ceiling the components close on the driver in one pass with
-    // union-find. The result is IDENTICAL by construction (label = min
-    // doc_id reachable — the loop's fixpoint), TextOpsSpec pins the
-    // chain/planted cases, and the distributed loop remains the path
-    // for corpus-scale graphs.
+    // union-find. Same labels by construction (min doc_id reachable);
+    // TextOpsSpec pins the two paths equal.
     val nEdges = p0.count()
     if (nEdges <= driverMaxEdges) {
       val spark = p0.sparkSession
@@ -635,47 +632,7 @@ object TextOps extends QueryGroup {
       val labels = parent.keysIterator.map(id => (id, find(id))).toSeq
       return labels.toDF("id", "label")
     }
-    val edges = p0.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p0.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val msgs = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min("label").as("nbr_min"))
-      val updated = labels.join(msgs, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("next"))
-        .localCheckpoint(true)
-      converged = updated.filter(col("next") < col("label")).isEmpty
-      labels = updated.select(col("id"), col("next").as("label"))
-      iter += 1
-    }
-    // fail LOUDLY on non-convergence: exiting here with partial labels
-    // would flow silently-wrong clusters into dd_*_clusters results. A
-    // component with diameter > maxIters needs the O(log n)-round
-    // contraction noted above, not a higher cap.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIters rounds — a " +
-        "component's diameter exceeds the cap; partial labels would be " +
-        "incorrect, refusing to return them")
-    labels
-  }
 
-  /** O(log n)-round connected components by alternating large-star /
-    * small-star contraction (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14) — the adversarial-chain fallback the
-    * min-label propagation above points at: a path graph of diameter d
-    * needs d label rounds but only O(log d) star rounds. Same contract
-    * ((doc_a, doc_b) pairs → (id, label = component minimum)), so it
-    * swaps in behind clustersOf unchanged if a corpus ever produces deep
-    * chains. Each round is two grouped aggregations + joins; edges are
-    * kept canonical (lo < hi) and deduped, so the edge set shrinks
-    * toward the star forest and convergence is edge-set stability
-    * (checked via count + order-independent hash fingerprint).
-    */
-  def connectedComponentsLogN(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
@@ -706,8 +663,7 @@ object TextOps extends QueryGroup {
       (r.getLong(0), r.getLong(1))
     }
 
-    var edges = canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .localCheckpoint(true)
+    var edges = canon(p0).localCheckpoint(true)
     var fp = fingerprint(edges)
     var iter = 0
     var converged = false
@@ -720,7 +676,8 @@ object TextOps extends QueryGroup {
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsLogN did not stabilize in $maxIters rounds")
+      s"connectedComponents did not converge in $maxIters rounds; partial " +
+        "labels would be incorrect, refusing to return them")
     // stable state is a star forest rooted at each component minimum
     edges.select(col("hi").as("id"), col("lo").as("label"))
       .union(edges.select(col("lo").as("id"), col("lo").as("label")))
@@ -804,8 +761,7 @@ object TextOps extends QueryGroup {
     // re-probes. Caveat: same-path data overwritten mid-session reuses
     // the cached decision — consistent with Spark's own session-scoped
     // file-listing caches, and the decision only picks a plan SHAPE.
-    // The decision is recorded in spark.graft.exactSubstring.lastPlan
-    // for harness/spec observability.
+    // The decision is posted as a Decision event for graft.QueryTrace.
     val spark = docs.sparkSession
     val wideHash = spark.conf.getOption("spark.graft.exactSubstring.wideHash")
       .exists(_.toBoolean)
@@ -826,8 +782,7 @@ object TextOps extends QueryGroup {
       val cacheKey = (docs.queryExecution.analyzed.semanticHash(), k, threshold)
       val cachedPick = censusCache.get(cacheKey)
       if (cachedPick != null) {
-        spark.conf.set("spark.graft.exactSubstring.lastPlan",
-          cachedPick._2 + " (cached census)")
+        Decision.post(spark.sparkContext, "exactSubstring.salt", cachedPick._2 + " (cached census)")
         cachedPick._1.intValue()
       } else {
         // DOCUMENT-level sample (filter BEFORE the explode, so the
@@ -851,7 +806,7 @@ object TextOps extends QueryGroup {
         val pick = if (est > threshold) 32 else 0
         val plan = s"${if (pick > 1) s"salted-$pick" else "window"}" +
           s" (hottest-gram census est ~$est positions, threshold $threshold)"
-        spark.conf.set("spark.graft.exactSubstring.lastPlan", plan)
+        Decision.post(spark.sparkContext, "exactSubstring.salt", plan)
         censusCache.put(cacheKey, (Integer.valueOf(pick), plan))
         pick
       }
@@ -1307,7 +1262,7 @@ object TextOps extends QueryGroup {
 
     // ── LSH-clusters ORACLE twin: the SAME production pipeline as the
     // row above — minhashPairs' capped band buckets → candidate pairs →
-    // jaccard verify → connectedComponents label propagation — with the
+    // jaccard verify → connectedComponents — with the
     // portable banding plugged in, so DuckDB can derive the identical
     // candidate graph and close the components with a recursive CTE.
     // This oracles the batch bucket/pair/cluster algebra end-to-end;

@@ -1,16 +1,17 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, QueryTrace, SparkEntry}
 
-/** Dump `.explain("formatted")` for a set of queries to files — the
-  * optimization-round evidence trail (plans/r16/<query>_<suffix>.txt).
+/** Dump the final adaptive plan (`EXPLAIN FORMATTED` of the executed
+  * noop write, from its `graft.QueryTrace` record) for a set of queries
+  * to files — the optimization-round evidence trail
+  * (plans/r16/<query>_<suffix>.txt).
   *
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [query …]"
   *
-  * With no query args, dumps every Bench.headline query. Plans are
-  * captured WITHOUT executing (initial AQE plan): the exchange count,
-  * join strategies, PushedFilters and ReadSchema are all visible there,
-  * and capture stays cheap enough to run for all 46 headliners.
+  * With no query args, dumps every Bench.headline query. Each query runs
+  * once, so runtime stage and broadcast reuse and AQE's join choices
+  * are visible in the dump.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -23,34 +24,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        // SPARK_GRAFT_PLAN_EXEC=1: execute first and dump the FINAL
-        // adaptive plan of the noop write (runtime stage/broadcast reuse
-        // visible) — the write has its own QueryExecution, captured via
-        // a listener because df.queryExecution is never the one executed
-        val txt =
-          if (sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")) {
-            @volatile var captured: String = null
-            val l = new org.apache.spark.sql.util.QueryExecutionListener {
-              override def onSuccess(f: String,
-                  qe: org.apache.spark.sql.execution.QueryExecution,
-                  d: Long): Unit =
-                captured = qe.explainString(
-                  org.apache.spark.sql.execution.FormattedMode)
-              override def onFailure(f: String,
-                  qe: org.apache.spark.sql.execution.QueryExecution,
-                  e: Exception): Unit = ()
-            }
-            spark.listenerManager.register(l)
-            try {
-              df.write.format("noop").mode("overwrite").save()
-              org.apache.spark.sql.graft.BusDrain(spark.sparkContext)
-            } finally spark.listenerManager.unregister(l)
-            if (captured != null) captured
-            else df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-          } else df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+        val txt = QueryTrace(spark)(SparkEntry.queries(name)(spark, sfDir)).finalPlan
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))

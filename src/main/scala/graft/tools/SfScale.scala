@@ -39,10 +39,15 @@ object SfScale {
   }
 
   /** Writes the ×`mult` corpus of `src` to `out`, unless `out/_DONE`
-    * already records this mult and source. */
+    * already records this mult and source. Refuses an `out` that is,
+    * contains or lies inside `src`, before touching anything. */
   def build(spark: SparkSession, src: String, out: String, mult: Int): Unit = {
+    val srcPath = Paths.get(src).toAbsolutePath.normalize
+    val outPath = Paths.get(out).toAbsolutePath.normalize
+    require(!srcPath.startsWith(outPath) && !outPath.startsWith(srcPath),
+      s"SfScale output $outPath overlaps its source $srcPath")
     val done = Paths.get(out, "_DONE")
-    val stamp = s"mult=$mult src=${Paths.get(src).toAbsolutePath.normalize}"
+    val stamp = s"mult=$mult src=$srcPath"
     if (Files.exists(done) && new String(Files.readAllBytes(done), UTF_8).trim == stamp) {
       println(s"[sfscale] cached corpus at $out ($stamp)"); return
     }

@@ -119,4 +119,14 @@ class BpeSpec extends AnyFunSuite {
       assert(recon == recon.trim && !recon.contains("  "))
     }
   }
+
+  test("tokenize builds of one vocabulary share one broadcast rank table and give equal rows") {
+    val tokenize = SparkEntry.queries("pipe_bpe_tokenize")
+    val first = tokenize(spark, TestSession.sf).collect().toSeq
+    val id = BpeOps.trained(spark, TestSession.sf)._2.id
+    val second = tokenize(spark, TestSession.sf).collect().toSeq
+    assert(BpeOps.trained(spark, TestSession.sf)._2.id == id,
+      "a second build broadcast its own rank table, so the executors' encode memo starts cold")
+    assert(second == first)
+  }
 }

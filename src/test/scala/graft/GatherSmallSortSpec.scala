@@ -30,18 +30,15 @@ class GatherSmallSortSpec extends AnyFunSuite {
     dir
   }
 
-  /** Rows, jobs started, and the range partition counts of the final
-    * adaptive plan's shuffle stages. */
+  /** Rows, and from a traced run the jobs it started and the range
+    * partition counts of its final adaptive plan's shuffle stages. */
   private def run(df: DataFrame): (Seq[(Long, Long)], Int, Seq[Int]) = {
-    val counter = new JobCounter(spark.sparkContext)
-    val (rows, jobs) =
-      try (df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))), counter.jobs)
-      finally counter.close()
-    val plan = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    val trace = QueryTrace(df.sparkSession)(df)
+    val plan = trace.execution.executedPlan.collectFirst { case a: AdaptiveSparkPlanExec => a }.get
     val ranges = plan.finalPhysicalPlan.collect {
       case s: ShuffleQueryStageExec => s.shuffle.outputPartitioning
     }.collect { case r: RangePartitioning => r.numPartitions }
-    (rows, jobs, ranges)
+    (df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))), trace.jobs, ranges)
   }
 
   test("a small-file orderBy gathers into one partition and runs no sampling job") {

@@ -12,12 +12,12 @@ class ProfileSpec extends AnyFunSuite {
     val runs = Profile.profile(spark, TestSession.sf, "q01_pricing_summary", 2)
     assert(runs.size == 2)
     runs.foreach { r =>
-      assert(r.planMs > 0 && r.topRules.nonEmpty)
+      assert(r.optimizeMs + r.physicalMs > 0 && r.topRules.nonEmpty)
       assert(r.jobs >= 1 && r.jobUnionMs > 0)
       assert(r.stages.exists(_.tasks >= 1), s"no stage with a task: ${r.stages}")
-      val parts = r.planMs + r.jobUnionMs + r.driverGapMs
-      assert(math.abs(parts - r.wallMs) <= 0.1 * r.wallMs,
-        s"plan + job union + driver gap = $parts ms against a wall of ${r.wallMs} ms")
+      val parts = r.buildMs + r.optimizeMs + r.physicalMs + r.jobUnionMs
+      assert(r.driverGapMs >= 0 && parts + r.driverGapMs == r.wallMs,
+        s"build + optimize + physical + job union = $parts ms against a wall of ${r.wallMs} ms")
     }
   }
 

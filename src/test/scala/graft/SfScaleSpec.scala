@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,5 +49,26 @@ class SfScaleSpec extends AnyFunSuite {
       assert(perUser(out.toString) == base.map { case (u, n) => u -> 3 * n },
         "same users, each timeline ×3")
     } finally deleteTree(out)
+  }
+
+  test("an output that is or overlaps the source is refused and the corpus stays byte-identical") {
+    val d = Files.createTempDirectory("graft-sfscale-self")
+    try {
+      tools.SfScale.build(spark, TestSession.sf, d.toString, 2)
+      def snapshot: Map[String, Seq[Byte]] = {
+        val paths = Files.walk(d)
+        try paths.iterator.asScala.filter(p => Files.isRegularFile(p))
+          .map(p => d.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+        finally paths.close()
+      }
+      val before = snapshot
+      assert(before.contains("_DONE") && before.keys.exists(_.endsWith(".parquet")))
+      for (out <- Seq(d.toString, d.toString + "/./", d.resolve("nested").toString)) {
+        val e = intercept[IllegalArgumentException](tools.SfScale.build(spark, d.toString, out, 2))
+        assert(e.getMessage.contains(d.toString), e.getMessage)
+      }
+      intercept[IllegalArgumentException](tools.SfScale.build(spark, d.resolve("lineitem.parquet").toString, d.toString, 2))
+      assert(snapshot == before, "a refused build changed the corpus")
+    } finally deleteTree(d)
   }
 }

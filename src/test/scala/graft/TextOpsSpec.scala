@@ -77,13 +77,14 @@ class TextOpsSpec extends AnyFunSuite {
     // the SELF-TRIGGERING census probe (round 13): no forced salt, a
     // tiny threshold forces the salted pick, the default keeps the
     // window — both adaptive results equal the base, and the recorded
-    // decision names the chosen plan
+    // decision, read from a traced run's record, names the chosen plan
     for ((threshold, expectPlan) <-
         Seq((1L, "salted-32"), (operators.TextOps.CensusThreshold, "window"))) {
       assert(spans(None, threshold) == base, s"adaptive (threshold=$threshold) diverges")
-      val plan = spark.conf.get("spark.graft.exactSubstring.lastPlan")
-      assert(plan.startsWith(expectPlan),
-        s"adaptive threshold=$threshold picked [$plan], expected $expectPlan")
+      val plan = QueryTrace(spark)(operators.TextOps.duplicatedSpans(docs, 20, None, threshold))
+        .decisions.map(_.choice)
+      assert(plan.size == 1 && plan.head.startsWith(expectPlan),
+        s"adaptive threshold=$threshold picked $plan, expected $expectPlan")
     }
     // a forced salt of 0 is the unconditional single-window plan (no probe)
     assert(spans(Some(0)) == base)
@@ -144,16 +145,16 @@ class TextOpsSpec extends AnyFunSuite {
       assert(r.getLong(1) <= r.getLong(0), "label must be the min doc_id")
       assert(r.getLong(2) >= 2, "every clustered doc has at least one partner")
     }
-    // a component whose diameter exceeds the iteration cap fails LOUDLY
-    // instead of returning partial (wrong) labels: a 10-node chain needs
-    // 9 propagation rounds, so maxIters = 3 cannot converge. (The cap
-    // contract belongs to the DISTRIBUTED loop — force it by setting the
-    // driver-path ceiling to 0; the driver union-find is exact at any
-    // diameter.)
+    // a graph that cannot stabilize inside the round cap fails LOUDLY
+    // instead of returning partial (wrong) labels: a 10-node chain is not
+    // a star, so one contraction round changes its edges and cannot also
+    // confirm stability. (The cap belongs to the DISTRIBUTED path — force
+    // it by setting the driver-path ceiling to 0; the driver union-find
+    // needs no rounds.)
     val chain = spark.createDataFrame(
       spark.sparkContext.parallelize((1L until 10L).map(i => Row(i, i + 1))), schema)
     val e = intercept[IllegalStateException](
-      TextOps.connectedComponents(chain, maxIters = 3, driverMaxEdges = 0))
+      TextOps.connectedComponents(chain, maxIters = 1, driverMaxEdges = 0))
     assert(e.getMessage.contains("did not converge"))
   }
 
@@ -180,26 +181,24 @@ class TextOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     import graft.operators.TextOps
     val schema = StructType(Seq(StructField("doc_a", LongType), StructField("doc_b", LongType)))
-    // a 60-node path has diameter 59: the O(diameter) propagation cannot
-    // converge inside its default 20-round cap (throws), while the star
-    // contraction collapses it — the exact adversarial case the fallback
-    // exists for
+    // a 60-node path has diameter 59, far past any per-hop round cap; the
+    // distributed path's star contraction collapses it inside its default
+    // cap — the adversarial case the contraction exists for
     val chain = spark.createDataFrame(
       spark.sparkContext.parallelize((1L until 60L).map(i => Row(i, i + 1))), schema)
-    assertThrows[IllegalStateException](
-      TextOps.connectedComponents(chain, driverMaxEdges = 0))
-    val cc = TextOps.connectedComponentsLogN(chain).collect()
+    val cc = TextOps.connectedComponents(chain, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc.size == 60 && cc.values.forall(_ == 1L),
       s"chain must collapse to one component rooted at 1: ${cc.values.toSet}")
-    // parity with the O(diameter) algorithm on the real LSH pair graph
+    // parity of the driver union-find and the distributed path on the real
+    // LSH pair graph
     val docs = Tables.load(spark, TestSession.sf, "documents")
       .select(col("doc_id"), col("text"))
     val pairs = TextOps.minhashPairs(docs).select("doc_a", "doc_b")
       .localCheckpoint(true)
     val a = TextOps.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = TextOps.connectedComponentsLogN(pairs).collect()
+    val b = TextOps.connectedComponents(pairs, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b, s"label maps diverge: ${a.size} vs ${b.size}")
     assert(a.nonEmpty)
